@@ -2,13 +2,14 @@
 
 The standard downstream pattern: a denormalized per-conversation rollup
 (turn counts, last activity, role mix) kept current as batches merge,
-WITHOUT rescanning the whole table. Maintenance is driven by the lake's
-change-data-feed (``timetravel.table_changes``): the CDF names exactly the
-conversations whose rows changed between two snapshots, those
-conversations' aggregates are recomputed from their (bucket-pruned) live
-rows, and the results upsert into the view. Per-refresh cost is
-O(changed conversations), not O(table) — the same amortization argument
-as the merge itself, so the view keeps up at 10^10-row scale.
+WITHOUT rescanning the whole table. Maintenance works a hash bucket at a
+time: a manifest diff (``timetravel.changed_buckets``: two manifest
+reads, no Spark job) names the buckets whose files changed since the version the
+view reflects; only those buckets are read at the new version, folded
+once, and rolled up, and the view's rows for every other bucket carry
+forward untouched. Exact because a conversation lives in exactly one
+bucket; per-refresh cost is O(changed buckets), not O(table) — the same
+amortization argument as the merge itself.
 
 The view itself is a tiny :class:`SnapshotLakeTable`-independent parquet
 directory keyed by conv_id with last-refresh bookkeeping (the source
@@ -20,12 +21,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from palimpzest_spark.cdc.lake import SnapshotLakeTable
-from palimpzest_spark.cdc.timetravel import table_changes
+from palimpzest_spark.cdc.lake import META_COLS, SnapshotLakeTable, lww_fold
+from palimpzest_spark.cdc.merge import _await_observation
+from palimpzest_spark.cdc.timetravel import changed_buckets
 
 
 def _rollup(rows: DataFrame) -> DataFrame:
@@ -39,7 +42,7 @@ def _rollup(rows: DataFrame) -> DataFrame:
 
 
 class ConversationRollupView:
-    """Materialized per-conversation rollup with CDF-driven refresh."""
+    """Materialized per-conversation rollup, refreshed one bucket at a time."""
 
     def __init__(self, path: str) -> None:
         self.path = path
@@ -70,77 +73,68 @@ class ConversationRollupView:
         return spark.read.parquet(os.path.join(self.path, self._load_meta()["data_dir"]))
 
     def full_build(self, spark: SparkSession, table: SnapshotLakeTable) -> int:
-        """Initial materialization: one full scan (bootstrap only)."""
-        v = table.current_version()
-        out = _rollup(table.read(spark))
-        data_dir = f"data_v{v}"
-        out.write.mode("overwrite").parquet(os.path.join(self.path, data_dir))
-        self._commit_meta(v, data_dir)
-        return v
+        """Initial materialization: a refresh from version 0 — every bucket
+        changed, no previous view."""
+        return self._refresh_from(spark, table, 0)["version"]
 
     def refresh(self, spark: SparkSession, table: SnapshotLakeTable) -> dict:
-        """Incremental refresh to the table's current snapshot.
+        """Refresh to the table's current snapshot, one bucket at a time.
 
-        1. CDF between the reflected and current versions names the
-           changed conversations (net row-level insert/update/delete).
-        2. ONLY those conversations' live rows are re-read — their hash
-           buckets' files (file pruning) semi-joined against the changed
-           set, which stays distributed end to end: nothing but bucket
-           ints is ever collected, so a batch touching millions of
-           conversations still refreshes without a driver-side list.
-        3. The view upserts via anti-join + union: unchanged conversations
-           carry forward, changed ones are replaced, fully-deleted ones
-           drop out.
+        1. The manifest diff between the reflected and current versions
+           names the changed buckets (no Spark job). If the reflected
+           version's manifest was expired, every bucket counts as changed:
+           a full rebuild.
+        2. Only those buckets are read at the current version and folded
+           once (the fold runs only when the scan holds a delta file).
+        3. Every live conversation in them is rolled up afresh; the view's
+           rows from the other buckets carry forward (none are read when
+           every bucket changed). A fully-deleted conversation has no live
+           rows, so it drops out.
+        ``changed_convs`` counts the conversations recomputed (observed on
+        the write, no extra job); ``recomputed_buckets`` lists the buckets.
         Idempotent: re-running the same span recomputes the same rows.
         """
-        v_from = self.reflected_version()
+        return self._refresh_from(spark, table, self.reflected_version())
+
+    def _refresh_from(self, spark: SparkSession, table: SnapshotLakeTable, v_from: int) -> dict:
         v_to = table.current_version()
         if v_to <= v_from:
-            return {"refreshed": False, "version": v_from, "changed_convs": 0}
-        changes = table_changes(table, spark, v_from, v_to)
-        changed = changes.select("conv_id").distinct().persist()
-        n_changed = changed.count()
-        if not n_changed:
-            changed.unpersist()
-            self._commit_meta(v_to, self._load_meta()["data_dir"])
-            return {"refreshed": True, "version": v_to, "changed_convs": 0}
-
-        # Only BUCKET ids reach the driver (bounded by n_buckets); the
-        # changed-conversation set itself stays distributed — a batch can
-        # touch millions of conversations and nothing but their buckets'
-        # files is scanned, nothing but bucket ints is collected.
-        buckets = sorted(
-            r["b"]
-            for r in changed.select(
-                F.pmod(F.xxhash64("conv_id"), F.lit(table.n_buckets))
-                .cast("int")
-                .alias("b")
-            ).distinct().collect()
-        )
-        from palimpzest_spark.cdc.lake import META_COLS, lww_fold
-
-        raw = table.read_raw(spark, buckets=buckets)
-        live = lww_fold(raw).filter(~F.col("_deleted")) if raw is not None else None
-        if live is None:
-            fresh = self.read(spark).limit(0)
+            return {"refreshed": False, "version": v_from, "changed_convs": 0,
+                    "recomputed_buckets": []}
+        try:
+            table.snapshot(v_from)
+        except ValueError:  # expired by expire_snapshots: rebuild every bucket
+            v_from = 0
+        buckets = changed_buckets(table, v_from, v_to)
+        snap = table.snapshot(v_to)
+        raw = table.read_raw(spark, buckets, version=v_to)
+        if raw is None:
+            live = table._empty_public(spark, v_to)
         else:
-            public = [c for c in live.columns if c not in META_COLS]
-            fresh = _rollup(live.select(*public).join(changed, "conv_id", "left_semi"))
-        prev_dir = self._load_meta()["data_dir"]
-        old = self.read(spark).join(changed, "conv_id", "left_anti")
-        out = old.unionByName(fresh)
+            if any(snap["deltas"].get(str(b)) for b in buckets):
+                raw = lww_fold(raw)
+            public = [c for c in raw.columns if c not in META_COLS]
+            live = raw.filter(~F.col("_deleted")).select(*public)
+        count = [F.count(F.lit(1)).alias("n")]
+        obs = Observation()
+        fresh = _rollup(live).observe(obs, *count)
+        rows = fresh
+        nb = int(snap.get("n_buckets") or table.n_buckets)
+        carried = [b for b in range(nb) if b not in buckets]
+        if v_from and carried:
+            bucket = F.pmod(F.xxhash64("conv_id"), F.lit(nb))
+            rows = self.read(spark).filter(bucket.isin(carried)).unionByName(fresh)
         # Write the next version into its OWN directory, then flip the
         # pointer with one atomic metadata rename — readers of the previous
         # version are never left pointing at a half-deleted directory, and a
         # crash anywhere here leaves the old version intact and the view
         # self-healing (the orphaned data_v{N} dir is simply overwritten on
         # the next successful refresh to that version).
-        next_dir = f"data_v{v_to}"
-        out.write.mode("overwrite").parquet(os.path.join(self.path, next_dir))
-        changed.unpersist()
+        prev_dir, next_dir = self._load_meta()["data_dir"], f"data_v{v_to}"
+        rows.write.mode("overwrite").parquet(os.path.join(self.path, next_dir))
+        n = int(_await_observation(obs, fresh, count)["n"] or 0)
         self._commit_meta(v_to, next_dir)
         if prev_dir != next_dir:
-            import shutil
-
             shutil.rmtree(os.path.join(self.path, prev_dir), ignore_errors=True)
-        return {"refreshed": True, "version": v_to, "changed_convs": n_changed}
+        return {"refreshed": True, "version": v_to, "changed_convs": n,
+                "recomputed_buckets": buckets}

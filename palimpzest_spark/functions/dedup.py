@@ -916,8 +916,9 @@ def minhash_lsh_pairs(
     # self-join (r6b): the join shuffled the banded rows TWICE (both sides
     # of the equi-join) and sorted each; the groupBy ships them once
     # (map-side combinable collect_list) and each member pairs with its
-    # tail in-row. sort_array makes id_a < id_b by construction (ids are unique
-    # within a (band, bucket): one banded row per id per band). Skew bound:
+    # tail in-row. array_distinct + sort_array make id_a < id_b by
+    # construction, also when a doc id repeats in the input (it lands twice
+    # in a bucket and would otherwise pair with itself). Skew bound:
     # a bucket of k ids emits k rows carrying O(k) arrays each — per-ROW
     # memory is O(bucket), never O(bucket^2) (the giant-duplicate-group
     # case degrades exactly like the join's k^2 output rows, without a
@@ -925,7 +926,7 @@ def minhash_lsh_pairs(
     # by the tier-agreement and oracle-twin tests.
     buckets = (
         banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("id")).alias("_ids"))
+        .agg(F.sort_array(F.array_distinct(F.collect_list("id"))).alias("_ids"))
         .filter(F.size("_ids") > 1)
     )
     cand = (

@@ -68,9 +68,16 @@ def connected_components(
       adversarial components (long chains, giant sparse components) where
       diameter-bound propagation would need thousands of rounds.
 
+    A null id is not a node: an edge with one null endpoint contributes
+    only its other endpoint (as a self-loop), and an all-null edge nothing —
+    every tier sees the same non-null edge list.
+
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iter`` rounds (not a silent wrong answer).
     """
+    edges = edges.select(
+        F.coalesce(src, dst).alias(src), F.coalesce(dst, src).alias(dst)
+    ).filter(F.col(src).isNotNull())
     if algorithm == "star":
         return _cc_star(edges, src, dst, max_iter)
     if algorithm != "minlabel":

@@ -625,6 +625,24 @@ def _sem_topk_exact_arrow(
     ).mapInArrow(kernel, schema=out_schema)
 
 
+def _window_topk(joined: DataFrame, vec_col: str, id_col: str, k: int) -> DataFrame:
+    """Per-record top-k over (record, corpus) candidate rows: cosine of
+    ``_qv`` against ``vec_col`` in the JVM, then a row_number window per
+    ``_rid`` ranked by similarity, ties on ascending corpus id."""
+    dot = F.aggregate(
+        F.zip_with(F.col("_qv"), F.col(vec_col), lambda a, b: a * b),
+        F.lit(0.0),
+        lambda s, x: s + x,
+    )
+    sim = dot / (_norm("_qv") * _norm(vec_col))
+    w = Window.partitionBy("_rid").orderBy(F.desc("_sim"), F.asc(id_col))
+    return (
+        joined.withColumn("_sim", sim)
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+    )
+
+
 def sem_topk(
     records: DataFrame,
     corpus: DataFrame,
@@ -685,18 +703,7 @@ def sem_topk(
             *[F.col("_qb0").bitwiseXOR(F.lit(1 << i)) for i in range(bits)],
         )
         joined = qb.withColumn("_cb", F.explode(probes)).join(cb, "_cb")
-        dot = F.aggregate(
-            F.zip_with(F.col("_qv"), F.col(vec_col), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-        sim = dot / (_norm("_qv") * _norm(vec_col))
-        w = Window.partitionBy("_rid").orderBy(F.desc("_sim"), F.asc(id_col))
-        top = (
-            joined.withColumn("_sim", sim)
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k)
-        )
+        top = _window_topk(joined, vec_col, id_col, k)
     else:
         # exact tier, r6 shape: the corpus is index-sized BY CONTRACT (it was
         # already fully materialized on the driver by the r5 broadcast join),
@@ -715,19 +722,7 @@ def sem_topk(
         if top is None:
             # fallback for shapes outside the Arrow fast path (non-numeric
             # ids, non-float vectors): the r5 broadcast-join formulation
-            joined = q.join(F.broadcast(c))
-            dot = F.aggregate(
-                F.zip_with(F.col("_qv"), F.col(vec_col), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-            sim = dot / (_norm("_qv") * _norm(vec_col))
-            w = Window.partitionBy("_rid").orderBy(F.desc("_sim"), F.asc(id_col))
-            top = (
-                joined.withColumn("_sim", sim)
-                .withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= k)
-            )
+            top = _window_topk(q.join(F.broadcast(c)), vec_col, id_col, k)
         elif payload_col:
             # re-attach the payload by id: the top frame is <= records*k rows
             # (tiny), so Catalyst broadcasts it against the corpus scan — the

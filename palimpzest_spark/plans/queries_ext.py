@@ -3514,11 +3514,12 @@ ORDER BY conv_id
 def cdc_rollup_view_incremental(spark, sf_dir):
     """ORACLE-CHECKED incrementally-maintained materialized view
     (cdc/views.ConversationRollupView): full-build after the first half of
-    the replay, then merge the remaining batches and CDF-driven refresh —
-    only the changed conversations are recomputed (via the bucket-pruned
-    point-lookup path) and upserted. The refreshed view must hash-equal
-    DuckDB's from-scratch rollup of the LWW-final state: a stale, dropped,
-    or over-refreshed conversation changes the hash."""
+    the replay, then merge the remaining batches and refresh a bucket at a
+    time — the buckets whose files changed are read at the new version,
+    folded once and rolled up, and the view's rows for the other buckets
+    carry forward. The refreshed view must hash-equal DuckDB's from-scratch
+    rollup of the LWW-final state: a stale, dropped, or duplicated
+    conversation changes the hash."""
     from palimpzest_spark.cdc.lake import SnapshotLakeTable
     from palimpzest_spark.cdc.merge import bootstrap
     from palimpzest_spark.cdc.runner import replay_batches

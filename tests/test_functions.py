@@ -92,6 +92,22 @@ def test_minhash_lsh_pairs(spark, docs):
     assert (exact["est_jaccard"] == 1.0).all()
 
 
+def test_minhash_lsh_pairs_repeated_ids_emit_no_self_pairs(spark, docs):
+    """A doc id that repeats in the input (the same doc twice, or two docs
+    sharing an id) lands twice in its LSH buckets; the pair expansion must
+    still emit only id_a < id_b, never (id, id)."""
+    rows = [tuple(r) for r in docs.collect()]
+    base = rows[0][1]
+    repeated = spark.createDataFrame(
+        pd.DataFrame(rows + [(0, base), (3, base), (4, base)], columns=["doc_id", "text"])
+    )
+    pairs = dedup.minhash_lsh_pairs(repeated, threshold=0.5).toPandas()
+    assert len(pairs) > 0
+    assert (pairs.id_a < pairs.id_b).all(), pairs[pairs.id_a >= pairs.id_b]
+    got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
+    assert {(0, 1), (0, 3), (0, 4)} <= got
+
+
 def test_minhash_deterministic_across_runs(spark, docs):
     s1 = dedup.minhash_signatures(docs).toPandas().set_index("id")["signature"]
     s2 = dedup.minhash_signatures(docs).toPandas().set_index("id")["signature"]

@@ -169,3 +169,25 @@ def test_small_tier_matches_distributed(spark, monkeypatch):
     small = {(r["node"], r["component"]) for r in connected_components(sdf).collect()}
     assert small == {("a", "a"), ("b", "a"), ("c", "a"),
                      ("x", "x"), ("y", "x"), ("q", "q")}
+
+
+def test_null_endpoints_agree_across_tiers(spark, monkeypatch):
+    """An edge with a null endpoint keeps only its other endpoint (a
+    self-loop) and an all-null edge is dropped — the same rows from the
+    in-process union-find tier, the distributed min-label rounds and the
+    star tier."""
+    from palimpzest_spark.functions import graph
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None), (4, 5), (5, None)],
+        "id_a long, id_b long",
+    )
+    want = {(1, 1), (2, 1), (3, 3), (4, 4), (5, 4)}
+
+    def rows(**kw):
+        return {(r["node"], r["component"]) for r in connected_components(df, **kw).collect()}
+
+    assert rows() == want
+    assert rows(algorithm="star") == want
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
+    assert rows() == want

@@ -238,9 +238,10 @@ def test_table_changes_emits_deletes_when_bucket_emptied(spark, tt):
 
 
 def test_conversation_rollup_view_incremental_refresh(spark, tmp_path):
-    """CDF-driven view maintenance: after more batches merge, refresh()
-    recomputes ONLY the changed conversations and the view equals a full
-    rollup of the final table; refresh is idempotent."""
+    """Bucket-at-a-time view maintenance: after more batches merge,
+    refresh() recomputes only the conversations in buckets whose files
+    changed, and the view equals a full rollup of the final table; refresh
+    is idempotent."""
     from pyspark.sql import functions as F
 
     from palimpzest_spark.cdc import feedgen
@@ -276,6 +277,150 @@ def test_conversation_rollup_view_incremental_refresh(spark, tmp_path):
 
     # stays correct through another batchless refresh + re-read
     assert sorted(map(tuple, view.read(spark).collect())) == got
+
+
+def _view_case(spark, d: str, n_files: int = 4):
+    """A 4-bucket table after two one-file batches, with its rollup view
+    built there. The feed files are small next to the base, so no merge
+    compacts and the buckets carry delta files."""
+    from palimpzest_spark.cdc.views import ConversationRollupView
+
+    base = feedgen.gen_base_table(f"{d}/base", n_convs=200, max_turns=12, seed=13)
+    feedgen.gen_change_feed(
+        f"{d}/feed", n_events=60 * n_files, n_convs=200, max_turns=12,
+        n_files=n_files, seed=13,
+    )
+    table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
+    bootstrap(spark, table, base)
+    replay_batches(spark, table, f"{d}/feed", files_per_batch=1, max_batches=2)
+    view = ConversationRollupView(f"{d}/view")
+    view.full_build(spark, table)
+    return table, view
+
+
+def _replay_rest(spark, table, d: str) -> None:
+    replay_batches(spark, table, f"{d}/feed", files_per_batch=1,
+                   skip_files=2, start_batch_id=2)
+
+
+def _assert_view_current(spark, view, table) -> list:
+    from palimpzest_spark.cdc.views import _rollup
+
+    assert view.reflected_version() == table.current_version()
+    got = sorted(map(tuple, view.read(spark).collect()))
+    want = sorted(map(tuple, _rollup(table.read(spark)).collect()))
+    assert got == want and len(got) > 0
+    return got
+
+
+def test_view_full_build_is_refresh_from_zero(spark, tmp_path):
+    """full_build is a refresh from version 0: every non-empty bucket is
+    recomputed, no previous view is read, and a rebuild over an existing
+    view replaces it."""
+    d = str(tmp_path)
+    table, view = _view_case(spark, d)
+    _assert_view_current(spark, view, table)
+    _replay_rest(spark, table, d)
+    assert view.full_build(spark, table) == table.current_version()
+    _assert_view_current(spark, view, table)
+    assert [e for e in os.listdir(view.path) if e.startswith("data")] == [
+        f"data_v{table.current_version()}"
+    ]
+
+
+def test_view_refresh_after_compaction_only_commit(spark, tmp_path):
+    """A commit that only compacts (no new data) rewrites bucket files: the
+    refresh recomputes those buckets and the view is unchanged in content."""
+    d = str(tmp_path)
+    table, view = _view_case(spark, d)
+    _replay_rest(spark, table, d)
+    view.refresh(spark, table)
+    before = _assert_view_current(spark, view, table)
+
+    assert table.has_deltas(), "vacuous: nothing to compact"
+    v = table.current_version()
+    table.compact(spark)
+    assert table.current_version() == v + 1 and not table.has_deltas()
+    m = view.refresh(spark, table)
+    assert m["refreshed"] and m["recomputed_buckets"] and m["changed_convs"] > 0
+    assert _assert_view_current(spark, view, table) == before
+
+
+def _delete_conversation(spark, table, batch_id: int) -> str:
+    """Merge one batch that deletes every turn of the first conversation;
+    returns its id."""
+    import datetime
+
+    state = table.read(spark).toPandas()
+    victim = sorted(state["conv_id"])[0]
+    turns = sorted(int(t) for t in state.loc[state["conv_id"] == victim, "turn_idx"])
+    late = datetime.datetime(2100, 1, 1)
+    deletes = spark.createDataFrame(
+        [("D", victim, t, None, late, 10**9 + i, 0, 10**9 + i) for i, t in enumerate(turns)],
+        FEED_SCHEMA,
+    )
+    merge_batch(spark, table, deletes, batch_id=batch_id)
+    return victim
+
+
+def test_view_refresh_drops_fully_deleted_conversation(spark, tmp_path):
+    """A conversation whose every turn is deleted has no live rows left in
+    its bucket, so the refresh drops it from the view."""
+    d = str(tmp_path)
+    table, view = _view_case(spark, d)
+    victim = _delete_conversation(spark, table, batch_id=2)
+    m = view.refresh(spark, table)
+    assert m["refreshed"] and len(m["recomputed_buckets"]) == 1
+    got = _assert_view_current(spark, view, table)
+    assert victim not in {r[0] for r in got}
+
+
+def test_view_refresh_across_rebucket(spark, tmp_path):
+    """A rebucket between refreshes changes the bucket count: every bucket
+    of the new layout is recomputed and the view stays exact."""
+    d = str(tmp_path)
+    table, view = _view_case(spark, d)
+    _replay_rest(spark, table, d)
+    table.rebucket(spark, 8)
+    m = view.refresh(spark, table)
+    assert m["refreshed"] and len(m["recomputed_buckets"]) == 8
+    _assert_view_current(spark, view, table)
+
+
+def test_view_refresh_after_snapshot_expiry(spark, tmp_path):
+    """When expire_snapshots has dropped the version the view reflects, the
+    refresh rebuilds every bucket instead of raising."""
+    d = str(tmp_path)
+    table, view = _view_case(spark, d, n_files=5)
+    v_view = view.reflected_version()
+    _replay_rest(spark, table, d)
+    assert table.current_version() == v_view + 3
+    expire_snapshots(table, keep_last=1, grace_seconds=0.0)
+    with pytest.raises(ValueError):
+        table.snapshot(v_view)
+    m = view.refresh(spark, table)
+    assert m["refreshed"] and m["recomputed_buckets"] == [0, 1, 2, 3]
+    _assert_view_current(spark, view, table)
+
+
+def test_view_refresh_job_budget(spark, tmp_path):
+    """A refresh over delta-carrying buckets starts at most 4 Spark jobs —
+    the previous view's schema read, the fold and rollup shuffles, and the
+    write — both when every bucket changed and when one bucket changed and
+    the others' rows carry forward. The recomputed-conversation count rides
+    the write."""
+    d = str(tmp_path)
+    table, view = _view_case(spark, d)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    for change in (lambda: _replay_rest(spark, table, d),
+                   lambda: _delete_conversation(spark, table, batch_id=4)):
+        change()
+        assert table.has_deltas(), "vacuous: no fold to run"
+        j0 = int(sched.nextJobId())
+        m = view.refresh(spark, table)
+        jobs = int(sched.nextJobId()) - j0
+        assert m["refreshed"] and jobs <= 4, f"refresh started {jobs} Spark jobs"
+        _assert_view_current(spark, view, table)
 
 
 def test_export_snapshot_survives_source_expiry(spark, tmp_path):
