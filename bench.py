@@ -82,9 +82,10 @@ def main() -> None:
         # Hot-key skew evidence: same event count, 95% of events on 1% of
         # conv_ids; the uniform side is the headline above (identical plan
         # shapes, so the headline's warmup covers these trials too). A ratio
-        # near 1.0 = merge throughput does not depend on key distribution
-        # (map-side-combinable LWW + AQE rebalance write — see
-        # cdc/bench.py:run_skew_bench for the interleaved standalone mode).
+        # near 1.0 = merge throughput does not depend on key distribution:
+        # the LWW fold is a map-side-combinable aggregate and the write is an
+        # AQE rebalance on _bucket, so the defense is structural. Exactness
+        # under the same skew is tests/test_cdc.py::test_extreme_hot_key_skew.
         hot = run_cdc_bench(spark, warmup=False, hot_frac=0.01, hot_share=0.95)
         extra["cdc_hot_key_events_per_sec"] = round(hot["events_per_sec"], 1)
         extra["cdc_skew_ratio"] = (

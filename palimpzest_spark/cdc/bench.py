@@ -3,8 +3,9 @@
 Generates a deterministic feed once per (size, seed) into a cached /tmp dir,
 replays it batch-mode into a fresh lake table, and reports events/sec over
 the merge-apply phase (bootstrap excluded — the metric is change-event
-throughput, BASELINE.json:2). Used by bench.py and by the N-vs-4N scaling
-evidence (``python -m palimpzest_spark.cdc.scaling``).
+throughput, BASELINE.json:2). ``_replay_fresh`` is the one replay trial
+behind bench.py, the write-amp gate (``cdc.writeamp``) and the N-vs-4N
+scaling gate (``cdc.scaling``).
 """
 
 from __future__ import annotations
@@ -98,6 +99,22 @@ def clone_table(src_root: str, dst_root: str) -> None:
                 _sh.copy(s, d)
 
 
+def _steal_jiffies() -> int:
+    """Sum of per-cpu hypervisor-steal counters (field 8 of /proc/stat) over
+    this process's allowed cores."""
+    try:
+        allowed = {f"cpu{c}" for c in os.sched_getaffinity(0)}
+        total = 0
+        with open("/proc/stat") as f:
+            for line in f:
+                parts = line.split()
+                if parts and parts[0] in allowed and len(parts) > 8:
+                    total += int(parts[8])
+        return total
+    except OSError:
+        return 0
+
+
 def _replay_fresh(
     spark: SparkSession,
     fix: dict[str, str],
@@ -107,10 +124,19 @@ def _replay_fresh(
     skip_files: int = 0,
     start_batch_id: int = 0,
 ) -> dict[str, Any]:
-    """``skip_files``/``start_batch_id``: tail-only replay — the template
+    """One replay trial into a fresh table — the trial every CDC gate runs.
+
+    Returns merge-apply throughput (bootstrap excluded), the per-batch
+    ``metrics`` list of ``replay_batches``, and ``steal_frac``: hypervisor
+    steal over this call's whole span as a fraction of the allowed cores'
+    seconds (USER_HZ=100). Each gate applies its own filter to it.
+
+    ``skip_files``/``start_batch_id``: tail-only replay — the template
     already holds the replayed feed prefix (e.g. the schema-evolution wave),
     so every measured batch is a steady-tail batch (the regime the
     BASELINE.json throughput metric describes)."""
+    cores = max(len(os.sched_getaffinity(0)), 1)
+    s0, w0 = _steal_jiffies(), time.monotonic()
     table_dir = tempfile.mkdtemp(prefix="pz_lake_", dir=_WORK_ROOT)
     try:
         if template_table is not None:
@@ -126,32 +152,20 @@ def _replay_fresh(
             skip_files=skip_files, start_batch_id=start_batch_id,
         )
         elapsed = time.perf_counter() - t0
-        total = sum(m["events"] for m in metrics)
-        return {
-            "events": total,
-            "batches": len(metrics),
-            "elapsed_sec": elapsed,
-            "events_per_sec": total / elapsed if elapsed else 0.0,
-            "final_rows": table.read(spark).count(),
-        }
+        final_rows = table.read(spark).count()
     finally:
         shutil.rmtree(table_dir, ignore_errors=True)
-
-
-def _steal_jiffies() -> int:
-    """Sum of per-cpu hypervisor-steal counters (field 8 of /proc/stat) over
-    this process's allowed cores — same measurement the scaling harness uses."""
-    try:
-        allowed = {f"cpu{c}" for c in os.sched_getaffinity(0)}
-        total = 0
-        with open("/proc/stat") as f:
-            for line in f:
-                parts = line.split()
-                if parts and parts[0] in allowed and len(parts) > 8:
-                    total += int(parts[8])
-        return total
-    except OSError:
-        return 0
+    wall = time.monotonic() - w0
+    total = sum(m["events"] for m in metrics)
+    return {
+        "events": total,
+        "batches": len(metrics),
+        "elapsed_sec": elapsed,
+        "events_per_sec": total / elapsed if elapsed else 0.0,
+        "final_rows": final_rows,
+        "steal_frac": (_steal_jiffies() - s0) / max(wall * 100.0 * cores, 1e-9),
+        "metrics": metrics,
+    }
 
 
 def run_cdc_bench(
@@ -184,13 +198,9 @@ def run_cdc_bench(
     SLOWS a trial — filtering is conservative), and report the median clean
     trial. Trial lists are included in the result for audit.
     """
-    import statistics
-    import time as _time
-
     fix = ensure_fixture(n_events=n_events, n_convs=n_convs, **fixture_kw)
     if warmup:
         _replay_fresh(spark, fix, files_per_batch, n_buckets)
-    cores = max(len(os.sched_getaffinity(0)), 1)
     runs: list[dict[str, Any]] = []
     # Keep trialing until ≥ min(trials, 3) CLEAN samples exist (steal ≤ cap),
     # up to 2·trials+2 attempts: r2's headline was quoted from a window with
@@ -200,12 +210,7 @@ def run_cdc_bench(
     want_clean = min(max(trials, 1), 3)
     max_attempts = 2 * max(trials, 1) + 2
     while len(runs) < max_attempts:
-        s0, w0 = _steal_jiffies(), _time.monotonic()
-        r = _replay_fresh(spark, fix, files_per_batch, n_buckets)
-        wall = _time.monotonic() - w0
-        # USER_HZ=100: steal fraction of this trial's core-seconds
-        r["steal_frac"] = (_steal_jiffies() - s0) / max(wall * 100.0 * cores, 1e-9)
-        runs.append(r)
+        runs.append(_replay_fresh(spark, fix, files_per_batch, n_buckets))
         n_clean = sum(1 for x in runs if x["steal_frac"] <= max_steal)
         if len(runs) >= max(trials, 1) and n_clean >= want_clean:
             break
@@ -216,82 +221,6 @@ def run_cdc_bench(
     out["trials_steal_frac"] = [round(r["steal_frac"], 4) for r in runs]
     out["n_clean"] = len([r for r in runs if r["steal_frac"] <= max_steal])
     return out
-
-
-def run_skew_bench(
-    spark: SparkSession,
-    n_events: int = 1_000_000,
-    n_convs: int = 20_000,
-    files_per_batch: int = 4,
-    n_buckets: int = 16,
-    rounds: int = 3,
-    max_steal: float = 0.05,
-    hot_frac: float = 0.01,
-    hot_share: float = 0.95,
-) -> dict[str, Any]:
-    """Hot-key skew throughput evidence (north rule: "salted repartitioning
-    on hot conv_id keys to defuse skew").
-
-    Replays the SAME event count twice per round — once with the default
-    near-uniform key mix, once with ``hot_share`` of all events landing on
-    ``hot_frac`` of the conv_ids (pathological Zipf) — and reports the
-    throughput ratio hot/uniform. The merge path has no skew-specific code
-    to toggle: its LWW fold is a map-side-combinable ``max_by`` aggregate
-    (hot keys collapse before the shuffle) and its write distribution is an
-    AQE ``rebalance`` hint on ``_bucket`` (a hot bucket splits across
-    tasks), so the defense is structural. A ratio near 1.0 is the claim
-    "throughput does not depend on the key distribution" made measurable;
-    correctness under the same skew is gated by
-    ``tests/test_cdc.py::test_extreme_hot_key_skew``.
-
-    Trials are interleaved uniform/hot inside each round so co-tenant noise
-    lands on both sides; per-trial steal fractions are measured and
-    steal-dirty rounds are dropped from the medians when any clean round
-    exists (same discipline as ``run_cdc_bench``).
-    """
-    import statistics
-
-    uni = ensure_fixture(n_events=n_events, n_convs=n_convs)
-    hot = ensure_fixture(
-        n_events=n_events, n_convs=n_convs, hot_frac=hot_frac, hot_share=hot_share
-    )
-    # one warmup replay per fixture shape (codegen/C2/parquet-codec warmth)
-    _replay_fresh(spark, uni, files_per_batch, n_buckets)
-    _replay_fresh(spark, hot, files_per_batch, n_buckets)
-    cores = max(len(os.sched_getaffinity(0)), 1)
-    rows: list[dict[str, Any]] = []
-    for _ in range(max(rounds, 1)):
-        row: dict[str, Any] = {}
-        for name, fix in (("uniform", uni), ("hot", hot)):
-            s0, w0 = _steal_jiffies(), time.monotonic()
-            r = _replay_fresh(spark, fix, files_per_batch, n_buckets)
-            wall = time.monotonic() - w0
-            row[name] = r["events_per_sec"]
-            row[f"{name}_steal"] = (_steal_jiffies() - s0) / max(
-                wall * 100.0 * cores, 1e-9
-            )
-        rows.append(row)
-    clean = [
-        r for r in rows
-        if r["uniform_steal"] <= max_steal and r["hot_steal"] <= max_steal
-    ] or rows
-    uni_med = statistics.median(r["uniform"] for r in clean)
-    hot_med = statistics.median(r["hot"] for r in clean)
-    return {
-        "uniform_events_per_sec": round(uni_med, 1),
-        "hot_events_per_sec": round(hot_med, 1),
-        "skew_ratio": round(hot_med / uni_med, 3) if uni_med else None,
-        "hot_frac": hot_frac,
-        "hot_share": hot_share,
-        "rounds": [
-            {k: round(v, 4 if k.endswith("_steal") else 1) for k, v in r.items()}
-            for r in rows
-        ],
-        "n_clean_rounds": len(
-            [r for r in rows
-             if r["uniform_steal"] <= max_steal and r["hot_steal"] <= max_steal]
-        ),
-    }
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -310,38 +239,23 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--trials", type=int, default=3)
     ap.add_argument("--max-steal", type=float, default=0.05)
     ap.add_argument("--cpus", type=int, default=0, help="0 = all available")
-    ap.add_argument(
-        "--skew", action="store_true",
-        help="run the hot-key skew comparison instead of the plain headline",
-    )
-    ap.add_argument("--hot-share", type=float, default=0.95)
-    ap.add_argument("--hot-frac", type=float, default=0.01)
     args = ap.parse_args(argv)
 
     cpus = args.cpus or max(len(os.sched_getaffinity(0)), 1)
     spark = get_spark(master=f"local[{cpus}]")
     try:
-        if args.skew:
-            out = run_skew_bench(
-                spark, n_events=args.events, n_convs=args.convs,
-                files_per_batch=args.fpb, n_buckets=args.buckets,
-                rounds=args.trials, max_steal=args.max_steal,
-                hot_frac=args.hot_frac, hot_share=args.hot_share,
-            )
-            out["metric"] = "cdc_skew_throughput_ratio"
-        else:
-            r = run_cdc_bench(
-                spark, n_events=args.events, n_convs=args.convs,
-                files_per_batch=args.fpb, n_buckets=args.buckets,
-                trials=args.trials, max_steal=args.max_steal,
-            )
-            out = {
-                "metric": "cdc_merge_events_per_sec",
-                "events_per_sec": round(r["events_per_sec"], 1),
-                "trials_events_per_sec": r["trials_events_per_sec"],
-                "trials_steal_frac": r["trials_steal_frac"],
-                "n_clean": r["n_clean"],
-            }
+        r = run_cdc_bench(
+            spark, n_events=args.events, n_convs=args.convs,
+            files_per_batch=args.fpb, n_buckets=args.buckets,
+            trials=args.trials, max_steal=args.max_steal,
+        )
+        out = {
+            "metric": "cdc_merge_events_per_sec",
+            "events_per_sec": round(r["events_per_sec"], 1),
+            "trials_events_per_sec": r["trials_events_per_sec"],
+            "trials_steal_frac": r["trials_steal_frac"],
+            "n_clean": r["n_clean"],
+        }
         out["cpus"] = cpus
         print(json.dumps(out))
     finally:

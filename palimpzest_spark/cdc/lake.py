@@ -58,6 +58,7 @@ On a real cluster with the Iceberg jar, ``merge.py`` swaps this for
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -67,6 +68,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 VERSION_HINT = "version-hint.txt"
+
+log = logging.getLogger(__name__)
 
 # process-wide count of driver-side commit rebases (lost CAS races recovered
 # WITHOUT re-running Spark jobs) — observability for benches/tests; merge
@@ -909,9 +912,9 @@ class SnapshotLakeTable:
                     paths.append(rel)
                 else:
                     skipped += 1
-        if skipped and os.environ.get("PZ_CDC_DEBUG", "") == "1":
-            print(f"    [read_conv] zone-map skipped {skipped} files, "
-                  f"reading {len(paths)}")
+        if skipped:
+            log.debug("[read_conv] zone-map skipped %d files, reading %d",
+                      skipped, len(paths))
         return paths, skipped
 
     def read_ts_range(
@@ -1043,10 +1046,8 @@ class SnapshotLakeTable:
 
         with ThreadPoolExecutor(max_workers=min(16, max(len(rels), 1))) as ex:
             stats.update(dict(ex.map(_stat, rels)))
-        if os.environ.get("PZ_CDC_DEBUG", "") == "1":
-            print(f"    [write_files] sparkjob={t_j1 - t_j0:.2f}s "
-                  f"liststats={time.perf_counter() - t_j1:.2f}s "
-                  f"files={len(rels)}")
+        log.debug("[write_files] sparkjob=%.2fs liststats=%.2fs files=%d",
+                  t_j1 - t_j0, time.perf_counter() - t_j1, len(rels))
         return out_rel, new_files, stats
 
     def abort_files(self, out_rel: str) -> None:
@@ -1159,8 +1160,9 @@ class SnapshotLakeTable:
         rename-atomic store). Concurrent writers use claims to avoid running
         DUPLICATE maintenance jobs — without them, two writers observing the
         same overflowing bucket both run the full fold and the loser's
-        output is dropped by rewrite validation (measured: the shared-table
-        arm of ``mwbench`` ran ~2x the expected compaction events). Claims
+        output is dropped by rewrite validation (measured: two writers
+        replaying into one shared table ran ~2x the compaction events of
+        the same feeds in separate tables). Claims
         are advisory (correctness never depends on them — validation still
         gates the commit) and self-expire after ``ttl_sec`` so a crashed
         holder cannot wedge maintenance."""

@@ -41,11 +41,9 @@ Per batch:
 
 from __future__ import annotations
 
-import os
+import logging
 import time
 from typing import Any
-
-_DEBUG = os.environ.get("PZ_CDC_DEBUG", "") == "1"
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +59,8 @@ from palimpzest_spark.cdc.reconcile import (
 from palimpzest_spark.cdc.transform import normalize_text_udf
 
 KEY_COLS = ("conv_id", "turn_idx")
+
+log = logging.getLogger(__name__)
 
 
 def _public_schema(table: SnapshotLakeTable) -> T.StructType | None:
@@ -253,9 +253,8 @@ def merge_batch(
             return m
         except CommitConflictError as e:
             last_err = e
-            if _DEBUG:
-                print(f"[merge {batch_id}] non-rebasable commit conflict "
-                      f"(attempt {attempt + 1}/8) — re-planning on the fresh snapshot")
+            log.debug("[merge %s] non-rebasable commit conflict (attempt %d/8) "
+                      "— re-planning on the fresh snapshot", batch_id, attempt + 1)
     raise last_err  # type: ignore[misc]
 
 
@@ -311,9 +310,8 @@ def _merge_once(
                                  t0, writer_id=writer_id, base=snap)
         if out is not None:
             return out
-        if _DEBUG:
-            print(f"[merge {batch_id}] delta-first aborted (schema anomaly) "
-                  f"{time.perf_counter() - t0:.1f}s — exact two-pass")
+        log.debug("[merge %s] delta-first aborted (schema anomaly) %.1fs "
+                  "— exact two-pass", batch_id, time.perf_counter() - t0)
         return _merge_twopass(spark, table, batch, batch_id, t0,
                               writer_id=writer_id, base=snap)
 
@@ -325,9 +323,8 @@ def _merge_once(
                            writer_id=writer_id, base=snap)
         if out is not None:
             return out
-        if _DEBUG:
-            print(f"[merge {batch_id}] fused gate aborted (schema anomaly) "
-                  f"{time.perf_counter() - t0:.1f}s — exact two-pass (grid reused)")
+        log.debug("[merge %s] fused gate aborted (schema anomaly) %.1fs "
+                  "— exact two-pass (grid reused)", batch_id, time.perf_counter() - t0)
     return _merge_twopass(spark, table, batch, batch_id, t0, grid=grid,
                           writer_id=writer_id, base=snap)
 
@@ -597,12 +594,10 @@ def _merge_delta_first(
         compact_sec = time.perf_counter() - t_cp
 
     elapsed = time.perf_counter() - t0
-    if _DEBUG:
-        print(f"[merge {batch_id}] delta-first done plan={t_w0 - t0:.2f}s "
-              f"job={t_w1 - t_w0:.2f}s obs={t_obs - t_w1:.2f}s "
-              f"commit={t_commit - t_obs:.2f}s "
-              f"compact({len(overflow)})={elapsed - (t_commit - t0):.2f}s "
-              f"total={elapsed:.1f}s ({n_events} ev)")
+    log.debug("[merge %s] delta-first done plan=%.2fs job=%.2fs obs=%.2fs "
+              "commit=%.2fs compact(%d)=%.2fs total=%.1fs (%d ev)",
+              batch_id, t_w0 - t0, t_w1 - t_w0, t_obs - t_w1, t_commit - t_obs,
+              len(overflow), elapsed - (t_commit - t0), elapsed, n_events)
     return {
         "batch_id": batch_id,
         "skipped": False,
@@ -690,12 +685,11 @@ def _merge_fused(
         raise
 
     n_events = grid["n_events"]
-    if _DEBUG:
-        t_now = time.perf_counter()
-        print(f"[merge {batch_id}] fused phases: cow_write={max(t_cow - t_plan, 0):.1f}s "
-              f"mor_write={max(t_mor - max(t_cow, t_plan), 0):.1f}s "
-              f"obs={t_now - max(t_mor, t_cow, t_plan):.1f}s total={t_now - t0:.1f}s "
-              f"(cow={len(cow)} mor={len(mor)})")
+    t_now = time.perf_counter()
+    log.debug("[merge %s] fused phases: cow_write=%.1fs mor_write=%.1fs obs=%.1fs "
+              "total=%.1fs (cow=%d mor=%d)", batch_id, max(t_cow - t_plan, 0),
+              max(t_mor - max(t_cow, t_plan), 0), t_now - max(t_mor, t_cow, t_plan),
+              t_now - t0, len(cow), len(mor))
     try:
         table.commit_merge(
             cow, cow_files, mor_files, stats, full.jsonValue(),
@@ -708,8 +702,7 @@ def _merge_fused(
             table.abort_files(rel)
         raise
     elapsed = time.perf_counter() - t0
-    if _DEBUG:
-        print(f"[merge {batch_id}] fused commit done {elapsed:.1f}s ({n_events} ev)")
+    log.debug("[merge %s] fused commit done %.1fs (%d ev)", batch_id, elapsed, n_events)
     return {
         "batch_id": batch_id,
         "skipped": False,
@@ -812,9 +805,8 @@ def _merge_twopass(
             )
         else:
             payload_schema = infer_payload_schema(batch)
-    if _DEBUG:
-        print(f"[merge {batch_id}] lineage+infer {time.perf_counter() - t0:.1f}s"
-              f"{' (grid reused)' if grid is not None else ''}")
+    log.debug("[merge %s] lineage+infer %.1fs%s", batch_id, time.perf_counter() - t0,
+              " (grid reused)" if grid is not None else "")
 
     table_public = _public_schema(table)
     public = reconcile_public_schema(table_public, payload_schema)
@@ -839,7 +831,22 @@ def _merge_twopass(
     # envelope is authoritative for the key (delete rows carry no payload)
     decoded = batch
     if payload_schema is not None:
-        decoded = decoded.withColumn("_p", F.from_json("payload", payload_schema))
+        # complex fields decode straight to their reconciled type: Spark
+        # cannot cast a struct to a widened struct with more fields
+        public_t = {f.name: f.dataType for f in public.fields}
+        decode_schema = T.StructType(
+            [
+                T.StructField(
+                    f.name,
+                    public_t[f.name]
+                    if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType))
+                    else f.dataType,
+                    True,
+                )
+                for f in payload_schema.fields
+            ]
+        )
+        decoded = decoded.withColumn("_p", F.from_json("payload", decode_schema))
     value_cols = []
     turn_t = next(f.dataType for f in public.fields if f.name == "turn_idx")
     for f in public.fields:
@@ -878,9 +885,8 @@ def _merge_twopass(
     # skew-immune write: AQE REBALANCE on _bucket — a hot bucket is SPLIT
     # across tasks (optimizeSkewsInRebalancePartitions) and a tiny batch
     # coalesces, so write width tracks data volume at any batch size.
-    if _DEBUG:
-        print(f"[merge {batch_id}] plan-built cow={len(cow)} mor={len(mor)} "
-              f"{time.perf_counter() - t0:.1f}s")
+    log.debug("[merge %s] plan-built cow=%d mor=%d %.1fs", batch_id, len(cow), len(mor),
+              time.perf_counter() - t0)
     cols = [f.name for f in full.fields]
     cow_files: dict = {}
     mor_files: dict = {}
@@ -920,8 +926,7 @@ def _merge_twopass(
             table.abort_files(rel)
         raise
     elapsed = time.perf_counter() - t0
-    if _DEBUG:
-        print(f"[merge {batch_id}] write+commit done {elapsed:.1f}s ({n_events} ev)")
+    log.debug("[merge %s] write+commit done %.1fs (%d ev)", batch_id, elapsed, n_events)
     return {
         "batch_id": batch_id,
         "skipped": False,

@@ -160,33 +160,40 @@ def complex_misfit_expr(raw, dt: T.DataType):
     ``merge._anomaly_expr`` so the two gates cannot drift apart.
 
     Array/Map: ``from_json`` returns NULL for drifted/malformed input —
-    ``parsed IS NULL`` is the signal. Struct (r6 ADVICE fix): ``from_json``
-    with a StructType NEVER returns NULL for malformed input — it returns
-    Row(null-fields) — so top-level drift like ``tool_args: 5`` passed
-    undetected and the steady decode silently nulled the field. Wrapping
-    the raw text as a one-element JSON array and parsing with
-    ``ArrayType(dt)`` restores the NULL signal for top-level drift; inner
-    drift (a JSON object none of whose keys match the struct) is flagged
-    when every parsed field is NULL while the raw text is not the JSON
-    null literal — conservative: a producer legitimately sending ``{}`` or
-    an all-null object is routed to the exact-inference path (correct,
-    just not free)."""
+    ``parsed IS NULL`` is the signal. Struct: ``from_json`` with a
+    StructType NEVER returns NULL for malformed input — it returns partial
+    results (Row with the unparseable fields NULL, unknown keys dropped) —
+    so the check is exact instead:
+
+    - top-level drift (``5``, ``"zz"``, ``[1]``): the raw text is wrapped
+      as a one-element JSON array and parsed with ``ArrayType(dt)``, which
+      restores the NULL signal;
+    - a key that is not a field of the struct (the decode would drop it);
+    - an atomic field whose raw JSON value (``get_json_object``) is
+      non-null but parses to NULL (inner widening or type drift);
+    - a complex-typed field: recurse.
+
+    ``{}`` and all-null objects fit: every field is absent, exactly what
+    the decode stores."""
     if isinstance(dt, T.StructType):
         wrapped = F.from_json(F.concat(F.lit("["), raw, F.lit("]")), T.ArrayType(dt))
         el = wrapped.getItem(0)
+        keys = F.json_object_keys(raw)
         if dt.fields:
-            from functools import reduce
-
-            all_null = reduce(
-                lambda a, b: a & b, [el.getField(f.name).isNull() for f in dt.fields]
-            )
+            names = F.array(*[F.lit(f.name) for f in dt.fields])
+            unknown = F.size(F.array_except(keys, names)) > 0
         else:
-            all_null = F.lit(True)
-        return raw.isNotNull() & (
-            wrapped.isNull()
-            | el.isNull()
-            | (all_null & (F.trim(raw) != F.lit("null")))
-        )
+            unknown = F.size(keys) > 0
+        bads = [wrapped.isNull(), el.isNull(), F.coalesce(unknown, F.lit(False))]
+        for f in dt.fields:
+            v = F.get_json_object(raw, f"$.{f.name}")
+            if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType)):
+                bads.append(complex_misfit_expr(v, f.dataType))
+            else:
+                bads.append(v.isNotNull() & el.getField(f.name).isNull())
+        from functools import reduce
+
+        return raw.isNotNull() & reduce(lambda a, b: a | b, bads)
     parsed = F.from_json(raw, dt)
     return raw.isNotNull() & parsed.isNull()
 

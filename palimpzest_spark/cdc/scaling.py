@@ -66,27 +66,15 @@ import subprocess
 import sys
 
 _CHILD = """
-import json, os, sys, time
+import json, os, sys
 cores, cpu_offset, n_events, n_convs, n_buckets, max_part_mb, fpb, steady = (
     int(x) for x in sys.argv[1:9]
 )
 
-def _steal_jiffies():
-    # sum the per-cpu steal counters (field 8 of /proc/stat) over OUR pinned
-    # cores: the host's hypervisor-steal is measurable directly, so each
-    # trial carries its own contamination meter instead of being guessed at
-    tot = 0
-    with open("/proc/stat") as f:
-        for line in f:
-            if line.startswith("cpu") and not line.startswith("cpu "):
-                idx = int(line[3:line.index(" ")])
-                if cpu_offset <= idx < cpu_offset + cores:
-                    parts = line.split()
-                    if len(parts) > 8:
-                        tot += int(parts[8])
-    return tot
 # disjoint CPU sets per level (N on 0..N-1, 4N on the upper cores) so the
-# idle level's JVM background threads never touch the measuring level's CPUs
+# idle level's JVM background threads never touch the measuring level's CPUs;
+# pinned before the import, so _replay_fresh's steal meter (summed over
+# sched_getaffinity) reads exactly these cores
 os.sched_setaffinity(0, set(range(cpu_offset, cpu_offset + cores)))
 from palimpzest_spark.session import get_spark
 from palimpzest_spark.cdc.bench import ensure_fixture, _replay_fresh
@@ -142,13 +130,9 @@ print("READY", flush=True)
 for line in sys.stdin:
     if line.strip() != "GO":
         break
-    s0, t0 = _steal_jiffies(), time.monotonic()
     m = _replay_fresh(spark, fix, files_per_batch=fpb, n_buckets=n_buckets,
                       template_table=template, skip_files=skip_files,
                       start_batch_id=start_bid)
-    wall = time.monotonic() - t0
-    # USER_HZ=100: steal fraction of this trial's pinned-core-seconds
-    m["steal_frac"] = (_steal_jiffies() - s0) / max(wall * 100.0 * cores, 1e-9)
     print("RESULT " + json.dumps(m), flush=True)
 if template:
     import shutil
@@ -196,7 +180,7 @@ class _Child:
         self.proc.stdin.write("GO\n")
         self.proc.stdin.flush()
         m = json.loads(self._read_until("RESULT "))
-        return m["events_per_sec"], m.get("steal_frac", 0.0)
+        return m["events_per_sec"], m["steal_frac"]
 
     def close(self) -> None:
         try:

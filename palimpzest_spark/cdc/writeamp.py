@@ -22,36 +22,11 @@ from __future__ import annotations
 import argparse
 import json
 import statistics
-import tempfile
 from typing import Any
 
 from pyspark.sql import SparkSession
 
-from palimpzest_spark.cdc.bench import _WORK_ROOT, ensure_fixture
-from palimpzest_spark.cdc.lake import SnapshotLakeTable
-from palimpzest_spark.cdc.merge import bootstrap
-from palimpzest_spark.cdc.runner import replay_batches
-
-
-def _replay_batch_times(
-    spark: SparkSession, fix: dict[str, str], files_per_batch: int, n_buckets: int
-) -> tuple[list[float], dict[str, int]]:
-    """One replay into a fresh table; per-batch merge seconds + MoR counters."""
-    import shutil
-
-    table_dir = tempfile.mkdtemp(prefix="pz_wamp_", dir=_WORK_ROOT)
-    try:
-        table = SnapshotLakeTable(table_dir, n_buckets=n_buckets)
-        bootstrap(spark, table, fix["base"])
-        ms = replay_batches(spark, table, fix["feed_dir"], files_per_batch=files_per_batch)
-        counters = {
-            "compacted_buckets": sum(m.get("compacted_buckets", 0) for m in ms),
-            "delta_buckets": sum(m.get("delta_buckets", 0) for m in ms),
-            "final_rows": table.read(spark).count(),
-        }
-        return [m["elapsed_sec"] for m in ms if not m.get("skipped")], counters
-    finally:
-        shutil.rmtree(table_dir, ignore_errors=True)
+from palimpzest_spark.cdc.bench import _replay_fresh, ensure_fixture
 
 
 def run_writeamp(
@@ -78,14 +53,19 @@ def run_writeamp(
 
         base_rows[k] = pq.ParquetFile(fix["base"]).metadata.num_rows
 
-    _replay_batch_times(spark, fixes["small"], files_per_batch, n_buckets)  # warmup
+    _replay_fresh(spark, fixes["small"], files_per_batch, n_buckets)  # warmup
     times: dict[str, list[float]] = {"small": [], "big": []}
     counters: dict[str, dict] = {}
     for _ in range(replays):
         for k in ("small", "big"):
-            ts, c = _replay_batch_times(spark, fixes[k], files_per_batch, n_buckets)
-            times[k].extend(ts)
-            counters[k] = c
+            r = _replay_fresh(spark, fixes[k], files_per_batch, n_buckets)
+            ms = r["metrics"]
+            times[k].extend(m["elapsed_sec"] for m in ms if not m.get("skipped"))
+            counters[k] = {
+                "compacted_buckets": sum(m.get("compacted_buckets", 0) for m in ms),
+                "delta_buckets": sum(m.get("delta_buckets", 0) for m in ms),
+                "final_rows": r["final_rows"],
+            }
     med = {k: statistics.median(v) for k, v in times.items()}
     ratio = med["big"] / med["small"] if med["small"] else float("inf")
     return {

@@ -340,33 +340,7 @@ def ngram_jaccard_pairs(
 # --- MinHash + LSH -------------------------------------------------------------------
 
 
-def _perm_seeds(num_perm: int, seed: int = 42) -> np.ndarray:
-    """One 64-bit xor-seed per permutation (uint64)."""
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 1 << 63, num_perm, dtype=np.int64).astype(np.uint64)
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    """Vectorized splitmix64 finalizer (Steele/Lea/Flood '14) — a full-
-    avalanche uint64 mix; numpy uint64 arithmetic wraps mod 2^64 by design.
-
-    This replaced the r1-r4 ``(a*h + b) mod 2^61-1`` family with a < 2^31:
-    that map stretches the 2^32-wide gram-hash domain across at most ~4
-    modular wraps, i.e. it is PIECEWISE MONOTONE in h — not remotely a
-    random permutation — so on low-entropy vocabularies (shared token
-    lattice) the per-permutation argmin coincided across unrelated
-    documents and est_jaccard ran ~+0.5 biased (measured on the sf0.01
-    documents table: mean est-true = +0.496, 49 false near-dup pairs at
-    t=0.5 vs the exact-Jaccard truth; the avalanche families measure
-    bias -0.004). Any avalanche mix is what the banding probability
-    model P(candidate)=1-(1-s^r)^b actually assumes."""
-    x = x + np.uint64(0x9E3779B97F4A7C15)
-    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return x ^ (x >> np.uint64(31))
-
-
-# gram-combiner constants (odd, < 2^20 so c*crc32 fits uint64 comfortably)
+# gram-combiner constants (odd, < 2^20 so c*uint32-token-hash fits uint64 comfortably)
 _GRAM_C = (0x9E377, 0x85EBD, 0xC2B2B)
 
 
@@ -738,12 +712,23 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, signature: array<long>).
 
-    Tiers: ``jvm`` (default, pure codegen — see ``_minhash_signatures_jvm``),
-    ``crc32`` (Arrow-vectorized numpy, the pre-r5 hot path, kept for the
-    universal-family variant), ``md5`` (DuckDB-recomputable oracle tier).
+    Tiers: ``jvm`` (default, pure codegen — see ``_minhash_signatures_jvm``)
+    and ``md5`` (DuckDB-recomputable oracle tier, vectorized numpy).
 
-    Numpy-tier hot-path design (was the most expensive bench query in r1):
-    - crc32 per TOKEN (not per gram): gram hashes are a numpy combine of
+    Permutation family: both tiers use an avalanche mix (xxhash64 /
+    md5), which is what the banding probability model
+    P(candidate)=1-(1-s^r)^b actually assumes. The r1-r4
+    ``(a*h + b) mod 2^61-1`` family with a < 2^31 stretched the 2^32-wide
+    gram-hash domain across at most ~4 modular wraps, i.e. it was
+    PIECEWISE MONOTONE in h — not remotely a random permutation — so on
+    low-entropy vocabularies (shared token lattice) the per-permutation
+    argmin coincided across unrelated documents and est_jaccard ran ~+0.5
+    biased (measured on the sf0.01 documents table: mean est-true =
+    +0.496, 49 false near-dup pairs at t=0.5 vs the exact-Jaccard truth;
+    the avalanche families measure bias -0.004).
+
+    md5-tier design:
+    - one hash per TOKEN (not per gram): gram hashes are a numpy combine of
       shifted token-hash arrays (``c1*h[i] + c2*h[i+1] + c3*h[i+2] mod 2^32``)
       — no per-gram string building, no per-doc set() (duplicate grams can't
       change a min).
@@ -751,43 +736,31 @@ def minhash_signatures(
       batch with ``np.minimum.reduceat`` over per-doc segment boundaries —
       one matrix op instead of a Python loop per document. Sub-chunks cap the
       matrix at ~32M elements so executor memory stays bounded.
-    crc32 is deterministic across processes (builtin hash() is salted by
+    md5 is deterministic across processes (builtin hash() is salted by
     PYTHONHASHSEED — never use it in distributed signatures).
     """
     if token_hash == "jvm":
         return _minhash_signatures_jvm(
             df, text_col, id_col, num_perm, shingle_n, seed
         )
-    seeds = _perm_seeds(num_perm, seed)
+    if token_hash != "md5":
+        raise ValueError(f"unknown token_hash: {token_hash}")
     cs = [np.uint64(c) for c in _GRAM_C[:shingle_n]]
     max_cells = 32_000_000  # perm-matrix element cap per sub-chunk
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zlib import crc32
+        import hashlib
 
-        if token_hash == "crc32":
-            tok_h = lambda t: crc32(t.encode())  # noqa: E731
-        elif token_hash == "md5":
-            # DuckDB-recomputable tier (first 8 md5 hex digits as uint32) —
-            # the oracle-parity hook; crc32 stays the numpy-path default
-            import hashlib
-
-            tok_h = lambda t: int(  # noqa: E731
-                hashlib.md5(t.encode()).hexdigest()[:8], 16
-            )
-        else:
-            raise ValueError(f"unknown token_hash: {token_hash}")
+        def tok_h(t: str) -> int:
+            # first 8 md5 hex digits as uint32 — DuckDB recomputes the same
+            return int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
 
         def perm_matrix(hh: np.ndarray) -> np.ndarray:
-            """(num_perm, n_grams) permuted-hash matrix, uint64."""
-            if token_hash == "crc32":
-                return _splitmix64(hh.astype(np.uint64)[None, :] ^ seeds[:, None])
-            # md5 tier: a true random-oracle family DuckDB can replay —
-            # permutation i of gram g = first 15 md5 hex digits (60 bits,
-            # fits a signed bigint on both engines) of "<g>:<i>". Hash each
-            # DISTINCT gram once per permutation, then gather.
-            import hashlib
-
+            """(num_perm, n_grams) permuted-hash matrix, uint64: a random-
+            oracle family DuckDB can replay — permutation i of gram g =
+            first 15 md5 hex digits (60 bits, fits a signed bigint on both
+            engines) of "<g>:<i>". Hash each DISTINCT gram once per
+            permutation, then gather."""
             uniq, inv = np.unique(hh, return_inverse=True)
             tab = np.empty((num_perm, len(uniq)), dtype=np.uint64)
             for u, g in enumerate(uniq):

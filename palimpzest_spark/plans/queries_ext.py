@@ -2283,7 +2283,7 @@ def _minhash_oracle_sql(num_perm: int = 64, bands: int = 16, shingle_n: int = 3)
     all 64 random-oracle permutation minima (permutation i of gram g =
     first 15 md5 hex digits of "<g>:<i>", the avalanche family that
     replaced the r1-r4 piecewise-monotone ``(a*h+b) mod 2^61-1`` map —
-    see functions/dedup._splitmix64's docstring for the measured +0.5
+    see functions/dedup.minhash_signatures' docstring for the measured +0.5
     est_jaccard bias that forced the change), band buckets, candidate
     join, and signature-agreement verification."""
     from palimpzest_spark.functions.dedup import _GRAM_C

@@ -675,6 +675,55 @@ def test_read_ts_range_zone_map_pruning(spark, tmp_path):
     assert n_pruned < n_all, (n_pruned, n_all)
 
 
+def test_steady_cdc_call_job_budget(spark, tmp_path, monkeypatch):
+    """The CDC calls the benchmark times start a pinned number of Spark
+    jobs: a steady delta-first merge_batch with no compaction, a read_conv
+    point lookup and a read_ts_range scan. A new collect or count in any of
+    them fails here; lower a pin only when a cut lands."""
+    from palimpzest_spark.cdc import merge as merge_mod
+
+    d = str(tmp_path)
+    base = feedgen.gen_base_table(f"{d}/base", n_convs=1500, max_turns=8, seed=5)
+    feedgen.gen_change_feed(
+        f"{d}/feed", n_events=600, n_convs=1500, max_turns=8, n_files=4, seed=5,
+        evolve_at=1.0,
+    )
+    files = sorted(glob.glob(f"{d}/feed/feed-*.parquet"))
+    table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
+    bootstrap(spark, table, base)
+    replay_batches(spark, table, f"{d}/feed", files_per_batch=1, max_batches=3)
+
+    took_delta_first = []
+    real = merge_mod._merge_delta_first
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        took_delta_first.append(out is not None)
+        return out
+
+    monkeypatch.setattr(merge_mod, "_merge_delta_first", spy)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(fn):
+        j0 = int(sched.nextJobId())
+        out = fn()
+        return int(sched.nextJobId()) - j0, out
+
+    n, m = jobs(lambda: merge_batch(
+        spark, table, spark.read.schema(FEED_SCHEMA).parquet(files[3]), batch_id=3))
+    assert took_delta_first == [True] and m["compacted_buckets"] == 0, m
+    assert 1 <= n <= 3, f"steady merge_batch started {n} Spark jobs"
+
+    conv = sorted(pd.read_parquet(base)["conv_id"])[7]
+    n, rows = jobs(lambda: table.read_conv(spark, [conv]).collect())
+    assert rows and 1 <= n <= 2, f"read_conv started {n} Spark jobs"
+
+    lo = feedgen.BASE_EPOCH * 10**6
+    n, _ = jobs(lambda: table.read_ts_range(spark, lo, lo + 3_600 * 10**6)
+                .write.format("noop").mode("overwrite").save())
+    assert 1 <= n <= 2, f"read_ts_range started {n} Spark jobs"
+
+
 def test_replay_with_quarantine_gates(spark, tmp_path):
     """Malformed change events (null conv_id, bad op, negative turn) must
     land in the dead letter instead of the table; the merged final state
@@ -755,34 +804,20 @@ def test_replay_with_quarantine_gates(spark, tmp_path):
     assert a == b and len(a) > 0
 
 
-def test_skew_bench_harness(spark, tmp_path, monkeypatch):
-    """run_skew_bench plumbing at toy scale: distinct fixture cache keys for
-    the hot-key variant, interleaved uniform/hot rounds, and a positive
-    throughput ratio. (The full-size ratio is BENCH evidence, not a unit
-    gate — this host's co-tenant noise would make a threshold assert flaky;
-    exactness under the same skew is test_extreme_hot_key_skew.)"""
+def test_hot_key_fixture_gets_own_cache_entry(tmp_path, monkeypatch):
+    """bench.py's hot-key trials (``run_cdc_bench(hot_frac=.., hot_share=..)``)
+    must replay their own skewed feed, not the cached uniform one."""
     import os
 
     from palimpzest_spark.cdc import bench as B
 
-    monkeypatch.setattr(B, "_WORK_ROOT", str(tmp_path))
     monkeypatch.setattr(B, "CACHE_ROOT", str(tmp_path / "cache"))
-
-    uni = B.ensure_fixture(n_events=4000, n_convs=150, n_files=4)
+    uni = B.ensure_fixture(n_events=400, n_convs=20, max_turns=4, n_files=2)
     hot = B.ensure_fixture(
-        n_events=4000, n_convs=150, n_files=4, hot_frac=0.02, hot_share=0.9
+        n_events=400, n_convs=20, max_turns=4, n_files=2, hot_frac=0.05, hot_share=0.9
     )
     assert os.path.dirname(uni["feed_dir"]) != os.path.dirname(hot["feed_dir"])
     assert os.path.exists(uni["base"]) and os.path.exists(hot["base"])
-
-    out = B.run_skew_bench(
-        spark, n_events=4000, n_convs=150, files_per_batch=2, n_buckets=4,
-        rounds=1, hot_frac=0.02, hot_share=0.9,
-    )
-    assert out["skew_ratio"] and out["skew_ratio"] > 0
-    assert len(out["rounds"]) == 1
-    r = out["rounds"][0]
-    assert {"uniform", "hot", "uniform_steal", "hot_steal"} <= set(r)
 
 
 def test_rebucket_evolution(spark, fixture_dirs, tmp_path):
@@ -1198,31 +1233,6 @@ def test_commit_merge_rebase_rules(tmp_path):
             cur2["schema"], dict(cur2["summary"]), base_snapshot=cur2)
 
 
-def test_multiwriter_bench_harness(spark, tmp_path, monkeypatch):
-    """run_multiwriter_bench plumbing at toy scale: disjoint renamed key
-    space for writer B, primed template, two pinned child drivers per arm,
-    and positive throughput in both arms. (The full-size contention ratio is
-    BENCH evidence, not a unit gate — host noise would make a threshold
-    assert flaky; commit-protocol exactness is
-    test_two_concurrent_writer_processes_occ_serialize and
-    test_commit_merge_rebase_rules.)"""
-    from palimpzest_spark.cdc import bench as B
-    from palimpzest_spark.cdc import mwbench as MW
-
-    monkeypatch.setattr(B, "CACHE_ROOT", str(tmp_path / "cache"))
-    monkeypatch.setattr(MW, "CACHE_ROOT", str(tmp_path / "cache"))
-    monkeypatch.setattr(MW, "_WORK_ROOT", str(tmp_path))
-
-    out = MW.run_multiwriter_bench(
-        n_events=2000, n_convs=100, n_files=4, files_per_batch=2,
-        n_buckets=4, rounds=1, spark=spark,
-    )
-    assert out["separate_events_per_sec"] > 0
-    assert out["shared_events_per_sec"] > 0
-    assert out["contention_ratio"] and out["contention_ratio"] > 0
-    assert len(out["rounds"]) == 1 and out["writers"] == 2
-
-
 def test_maintenance_claims(tmp_path):
     """Advisory compaction claims: create-if-absent exclusivity, release,
     and TTL expiry of a crashed holder's stale claim."""
@@ -1314,6 +1324,13 @@ def test_probe_agrees_with_anomaly_expr(spark):
                 "tool_args",
                 T.StructType([T.StructField("x", T.ArrayType(T.LongType()))]),
             ),
+            T.StructField(
+                "meta",
+                T.StructType([
+                    T.StructField("a", T.StringType()),
+                    T.StructField("b", T.LongType()),
+                ]),
+            ),
         ]
     )
     cases = [
@@ -1334,6 +1351,17 @@ def test_probe_agrees_with_anomaly_expr(spark):
         ('{"conv_id": "c1", "turn_idx": 3, "tool_args": {"zz": 1}}', False),
         # JSON null for the struct field: absent value, fits
         ('{"conv_id": "c1", "turn_idx": 3, "tool_args": null}', True),
+        # partial inner drift: from_json returns partial results, so the
+        # steady decode would drop the key / null the value
+        ('{"conv_id": "c1", "turn_idx": 3, "meta": {"a": "x", "b": 1}}', True),
+        ('{"conv_id": "c1", "turn_idx": 3, "meta": {"a": "x", "zzz": 2}}', False),
+        ('{"conv_id": "c1", "turn_idx": 3, "meta": {"a": "x", "b": 1.5}}', False),
+        ('{"conv_id": "c1", "turn_idx": 3, "meta": {"a": "x", "b": "notnum"}}', False),
+        ('{"conv_id": "c1", "turn_idx": 3, "tool_args": {"x": "notarr"}}', False),
+        # empty and all-null objects store exactly what they say: they fit
+        ('{"conv_id": "c1", "turn_idx": 3, "meta": {}}', True),
+        ('{"conv_id": "c1", "turn_idx": 3, "meta": {"a": null, "b": null}}', True),
+        ('{"conv_id": "c1", "turn_idx": 3, "tool_args": {}}', True),
     ]
     for payload, fits in cases:
         b = spark.createDataFrame([(payload,)], "payload string")
@@ -1344,6 +1372,71 @@ def test_probe_agrees_with_anomaly_expr(spark):
             .collect()[0]["n"]
         )
         assert ((n_anom or 0) == 0) is fits, payload
+
+
+def test_struct_inner_key_after_evolution_matches_fold(spark, tmp_path):
+    """Once the table has a struct column, a steady batch whose struct
+    value carries a new inner key must widen the struct (the exact path),
+    not drop the key in the known-schema decode: the table equals the
+    oracle fold."""
+    import json as _json
+
+    from pyspark.sql import functions as F
+
+    from palimpzest_spark.cdc import merge as merge_mod
+
+    d = tmp_path
+    base = feedgen.gen_base_table(str(d / "base"), n_convs=30, max_turns=4, seed=13)
+    table = SnapshotLakeTable(str(d / "lake"), n_buckets=4)
+    bootstrap(spark, table, base)
+
+    def batch(rows, seq0):
+        pdf = pd.DataFrame(
+            [
+                {
+                    "op": "U", "conv_id": c, "turn_idx": t,
+                    "payload": _json.dumps({"conv_id": c, "turn_idx": t, "role": "user",
+                                            "text": f"t{seq0 + i}", "tool": None,
+                                            "meta": meta}),
+                    "ts": pd.Timestamp((feedgen.BASE_EPOCH + 500_000 + seq0 + i) * 10**9),
+                    "event_seq": seq0 + i, "partition": 0, "offset": seq0 + i,
+                }
+                for i, (c, t, meta) in enumerate(rows)
+            ]
+        )[FEED_SCHEMA.fieldNames()]
+        return pdf, spark.createDataFrame(pdf, schema=FEED_SCHEMA)
+
+    convs = sorted(pd.read_parquet(base)["conv_id"].unique())
+    f1, b1 = batch([(convs[0], 0, {"a": "x", "b": 1}), (convs[1], 0, {"a": "y", "b": 2})], 0)
+    merge_batch(spark, table, b1, batch_id=1)
+    meta_t = table.schema()["meta"].dataType
+    assert sorted(meta_t.fieldNames()) == ["a", "b"], meta_t
+
+    # the steady path's anomaly gate must flag the inner key
+    public = merge_mod._public_schema(table)
+    f2, b2 = batch([(convs[2], 0, {"a": "z", "zzz": 3})], 10)
+    flagged = (
+        b2.withColumn("_m", F.from_json("payload", "map<string,string>"))
+        .agg(F.sum(merge_mod._anomaly_expr(public)).alias("n")).first()["n"]
+    )
+    assert flagged == 1
+    merge_batch(spark, table, b2, batch_id=2)
+    assert sorted(table.schema()["meta"].dataType.fieldNames()) == ["a", "b", "zzz"]
+
+    expected = fold(pd.read_parquet(base), pd.concat([f1, f2], ignore_index=True))
+    got = _actual(spark, table)
+    assert len(got) == len(expected)
+
+    def norm(v):
+        if v is None or (isinstance(v, float) and pd.isna(v)):
+            return None
+        v = v.asDict() if hasattr(v, "asDict") else dict(v)
+        return {k: x for k, x in v.items() if x is not None} or None
+
+    want = {(r.conv_id, int(r.turn_idx)): norm(r.meta) for r in expected.itertuples()}
+    have = {(r.conv_id, int(r.turn_idx)): norm(r.meta) for r in got.itertuples()}
+    assert have == want
+    assert have[(convs[2], 0)] == {"a": "z", "zzz": 3}
 
 
 def test_infer_payload_schema_accepts_pretty_printed_json(spark):

@@ -140,11 +140,11 @@ def test_minhash_jvm_plan_hashes_grams_once(spark, docs):
 
 
 def test_minhash_tiers_agree_on_dup_structure(spark, docs):
-    """All three hash tiers (jvm codegen / crc32 numpy / md5 oracle) are
-    different permutation families, but on the planted fixture each must
-    find the same exact-dup and near-dup pairs and nothing else."""
+    """Both hash tiers (jvm codegen / md5 oracle) are different
+    permutation families, but on the planted fixture each must find the
+    same exact-dup and near-dup pairs and nothing else."""
     expect = {(0, 1), (0, 2), (1, 2), (0, 6), (1, 6), (2, 6), (0, 3), (1, 3), (2, 3), (3, 6)}
-    for tier in ("jvm", "crc32", "md5"):
+    for tier in ("jvm", "md5"):
         bh = "md5" if tier == "md5" else "xxhash64"
         pairs = dedup.minhash_lsh_pairs(
             docs, threshold=0.5, token_hash=tier, band_hash=bh
@@ -159,7 +159,7 @@ def test_minhash_estimator_unbiased_on_token_lattice(spark):
     the 32-bit gram hash, so on a low-entropy shared-vocabulary lattice the
     per-permutation argmins coincided across UNRELATED documents and
     est_jaccard ran ~+0.5 biased (49 false near-dup pairs at t=0.5 on
-    sf0.01). Avalanche families (splitmix64 / xxhash64 / md5) must estimate
+    sf0.01). Avalanche families (xxhash64 / md5) must estimate
     true Jaccard within noise: |mean bias| well under the old +0.5."""
     import itertools
     import re
@@ -184,7 +184,7 @@ def test_minhash_estimator_unbiased_on_token_lattice(spark):
         (a, b): len(g[a] & g[b]) / len(g[a] | g[b])
         for a, b in itertools.combinations(sorted(g), 2)
     }
-    for tier in ("jvm", "crc32"):
+    for tier in ("jvm",):
         est = dedup.minhash_lsh_pairs(
             df, threshold=0.0, token_hash=tier
         ).toPandas()

@@ -368,7 +368,7 @@ def test_real_replay_writes_delta_records_and_cold_reads_match(spark, tmp_path):
 
 
 def test_interval_zero_disables_deltas(tmp_path, monkeypatch):
-    """The metabench 'full' arm contract: interval 0 → every commit full."""
+    """CHECKPOINT_INTERVAL 0 disables delta commits: every commit is full."""
     monkeypatch.setattr(lake_mod, "CHECKPOINT_INTERVAL", 0)
     t = _mk_table(tmp_path / "lake")
     for i in range(1, 4):
