@@ -2,8 +2,9 @@
 """Benchmark harness.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and, once warm, the CDC
-merge-apply replay (the BASELINE.json headline metric). Prints ONE JSON line:
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on) and, once warm, the CDC merge-apply replay (the
+BASELINE.json headline metric). Prints ONE JSON line:
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 """
@@ -19,7 +20,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -46,9 +46,9 @@ HEADLINE = [
 
 def main() -> None:
     from palimpzest_spark.plans.queries import QUERIES
-    from palimpzest_spark.session import get_spark
+    from palimpzest_spark.session import DEFAULT_CPUS, get_spark
 
-    spark = get_spark(app_name="bench", master=f"local[{CPUS}]")
+    spark = get_spark(app_name="bench")
 
     timings: dict[str, float] = {}
     # Warm pass: run every query once untimed. First executions pay JVM JIT
@@ -107,7 +107,7 @@ def main() -> None:
                 "unit": "events/sec" if headline_metric.startswith("cdc") else "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "cpus": int(CPUS),
+                "cpus": int(DEFAULT_CPUS),
                 **{k: v for k, v in extra.items() if v is not None},
             }
         )

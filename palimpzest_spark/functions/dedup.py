@@ -1,6 +1,6 @@
 """Deduplication for training-data pipelines.
 
-Five strategies, each chosen for a different scale/fidelity point:
+Six strategies, each chosen for a different scale/fidelity point:
 
 - **exact**        : hash-groupBy on normalized text. One shuffle of (hash,
                      id) pairs only — never ships full text.
@@ -10,25 +10,33 @@ Five strategies, each chosen for a different scale/fidelity point:
 - **MinHash + LSH** : shingles → 64-perm minhash signature (default tier:
                      ONE fused Arrow kernel — byte-level tokenize + a
                      bit-exact xxhash64 twin + the permutation rehash, all
-                     vectorized numpy; ``mapInPandas`` tiers kept for the
-                     universal hash family and the DuckDB md5 oracle) →
-                     band buckets → candidates only from shared buckets
-                     (standard banding: b bands of r rows, P(candidate) =
-                     1-(1-s^r)^b), expanded per bucket from one grouped
-                     aggregation. The 100 TB path: shuffle volume is
-                     O(#docs * #bands) of 8-byte hashes.
+                     vectorized numpy; a ``mapInPandas`` md5 tier is the
+                     DuckDB oracle) → band buckets → candidates only from
+                     shared buckets (standard banding: b bands of r rows,
+                     P(candidate) = 1-(1-s^r)^b), expanded per bucket from
+                     one grouped aggregation and verified in-row. Shuffle
+                     volume is O(#docs * #bands) rows, each carrying the
+                     doc's id and whole signature (num_perm longs): the
+                     signature kernel runs once, with no re-attach join.
 - **SimHash**      : 64-bit fingerprint, near-dups = hamming ≤ k, banded on
                      16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ one of 4
                      chunks equal).
+- **winnowing**    : documents sharing selected character-k-gram
+                     fingerprints (local overlap, MOSS-style).
 - **embedding cosine**: near-dup joins on embedding vectors; brute-force
                      within LSH hyperplane buckets (``similarity.py``).
 
-All signature computation is Arrow-vectorized numpy — no per-row Python.
+Signatures are computed in Arrow batches on the executors. The MinHash and
+n-gram kernels are vectorized numpy with no per-row Python; the SimHash and
+winnowing kernels, and the md5 oracle tier, loop over rows in Python.
+
+Every pair function returns a lazy plan and persists nothing: MinHash,
+SimHash and winnowing read their signatures once, and pair members inside
+one grouped aggregation (``_bucket_pairs``).
 """
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Iterator
 
 import numpy as np
@@ -87,80 +95,34 @@ def word_shingles(col: str, n: int = 3) -> F.Column:
     return F.array_distinct(grams)
 
 
+# --- bucket pairs (shared) ---------------------------------------------------------
+
+
+def _bucket_pairs(
+    members: DataFrame, keys: list[str], member: F.Column, max_size: int | None = None
+) -> DataFrame:
+    """(a, b) for every two members that share a bucket ``keys`` value, a
+    before b in ``sort_array`` order — also twice when a member is listed
+    twice, so callers filter a strict order on their id and drop duplicates.
+
+    One grouped aggregation, not a bucket self-join: the groupBy ships each
+    member once, and each member pairs in-row with the tail after it. A bucket of k members emits
+    k rows carrying its O(k) array — per-row memory is O(bucket), never
+    O(bucket^2). Buckets over ``max_size`` members (stop-grams) emit nothing.
+    """
+    size = F.size("_m")
+    keep = size > 1 if max_size is None else (size > 1) & (size <= max_size)
+    buckets = (
+        members.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("_m"))
+        .filter(keep)
+    )
+    return buckets.select("_m", F.posexplode("_m").alias("_pos", "a")).select(
+        "a", F.explode(F.slice("_m", F.col("_pos") + 2, size)).alias("b")
+    )
+
+
 # --- n-gram Jaccard ----------------------------------------------------------------
-
-
-# Recent pair-calls' cached intermediates, released lazily as newer
-# generations arrive (or explicitly via release_dedup_caches). Bounded:
-# at most _MAX_LIVE_GENERATIONS generations are ever live. Guarded by a
-# lock so concurrent query threads (the suite/window runner) can't corrupt
-# the list; unpersist calls happen OUTSIDE the lock (they block on the JVM).
-_LIVE_LOCK = threading.Lock()
-_LIVE_CACHED: list[list[DataFrame]] = []
-_MAX_LIVE_GENERATIONS = 2
-
-# Per-call plan salt. Spark's CacheManager keys persisted data by the
-# CANONICALIZED plan, so two invocations of the same pair function over the
-# same input share one cache entry: the newer call's persist() no-ops
-# ("already cached"), and the generation release of the OLDER call then
-# drops the shared entry mid-query — the newer call silently runs with all
-# its persists dead (r6: the bench's timed curation_pipeline ran 21s vs 6s
-# because the warm pass's release killed its caches). A unique literal
-# column inside each persisted frame makes every call's plan distinct:
-# each invocation owns (and releases) exactly its own cache entries, and a
-# re-run never silently rides a previous run's materialized intermediates.
-_CALL_GEN = [0]
-
-
-def _call_salt() -> F.Column:
-    with _LIVE_LOCK:
-        _CALL_GEN[0] += 1
-        return F.lit(_CALL_GEN[0]).alias("_callgen")
-
-
-def release_dedup_caches() -> None:
-    """Unpersist the cached intermediates of recent pair calls.
-    Call after the returned pairs frame has been materialized (written /
-    collected) when you want executor storage back immediately — e.g. at
-    the end of a curation-pipeline dedup stage. Safe at any time: a pairs
-    frame materialized later simply recomputes its lineage."""
-    with _LIVE_LOCK:
-        gens, _LIVE_CACHED[:] = _LIVE_CACHED[:], []
-    for gen in gens:
-        for df in gen:
-            df.unpersist()
-
-
-def _scoped_release(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Deferred generational release of wide cached intermediates (the
-    shingle/signature frames each pair function persists for its multi-
-    consumer plan).
-
-    The returned pairs frame is LAZY, so the intermediates cannot be
-    unpersisted here without forcing materialization — and measured on the
-    sf0.1 bench, an eager ``localCheckpoint`` (round-3 ADVICE's first
-    suggestion) made `dedup_minhash_docs` 8-10x slower (12-17s vs
-    1.3-2.0s): the checkpoint bypasses the AQE-planned single-pass write
-    and double-materializes every pair block. Instead each call enrolls its
-    generation and releases all but the newest _MAX_LIVE_GENERATIONS (=2),
-    so a long-lived pipeline looping dedup stages pins a bounded number of
-    blocks (the round-3 ADVICE leak) while a composition that BUILDS two
-    pair plans before materializing either (e.g. a union of two dedup
-    stages) keeps both persists effective. Build-three-then-materialize
-    would silently defeat the oldest persist (correct output, recompute
-    cost) — materialize or call ``release_dedup_caches()`` between stages
-    instead. Unpersisting a frame another plan still references is always
-    correct in Spark (it silently recomputes)."""
-    with _LIVE_LOCK:
-        _LIVE_CACHED.append(list(cached))
-        stale, _LIVE_CACHED[:] = (
-            _LIVE_CACHED[:-_MAX_LIVE_GENERATIONS],
-            _LIVE_CACHED[-_MAX_LIVE_GENERATIONS:],
-        )
-    for gen in stale:
-        for df in gen:
-            df.unpersist()
-    return out
 
 
 def ngram_jaccard_pairs(
@@ -240,14 +202,14 @@ def ngram_jaccard_pairs(
                 [ids, grams, *extras], [f.name for f in out_fields]
             )
 
-    base = (
-        narrow.mapInArrow(kernel, schema=T.StructType(out_fields))
-        .withColumn("_callgen", _call_salt())
-        .withColumn("sz", F.size("grams"))
+    # No persist: the gram kernel runs once per consumer (the document
+    # frequencies, the prefix ranking and the verify, whose two sides share
+    # one exchange). Persisting it and the prefix rows measured no faster
+    # (sf1.0, local[4]: 53.0 s with, 48.5 s without) and needs a cache
+    # lifetime that the caller of a lazy plan cannot see.
+    base = narrow.mapInArrow(kernel, schema=T.StructType(out_fields)).withColumn(
+        "sz", F.size("grams")
     )
-    # the gram arrays feed three consumers (prefix ranking + both verify
-    # sides); without a persist the shingling recomputes per consumer
-    base = base.persist()
 
     tok = base.select("id", "sz", F.explode("grams").alias("g"),
                       *(["blk"] if block_col else []))
@@ -275,9 +237,6 @@ def ngram_jaccard_pairs(
             *(["blk"] if block_col else []),
         )
     )
-    # the prefix rows feed BOTH sides of the self-join; persisting avoids a
-    # second full tok->freq->rank pass (r6: measured ~40% of the pair cost)
-    ranked = ranked.persist()
     a, b = ranked.alias("a"), ranked.alias("b")
     # PPJoin positional filter (Xiao et al. 2008), exact: a true pair's
     # FIRST shared gram (in the global order) is in both prefixes, and past
@@ -312,19 +271,18 @@ def ngram_jaccard_pairs(
         F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
     ).distinct()
 
-    ga = base.select(
-        F.col("id").alias("id_a"), F.col("grams").alias("grams_a"), F.col("sz").alias("sza")
+    # both verify sides are the same plan up to the alias, so Spark reuses
+    # one exchange of the gram arrays for the two joins
+    ga, gb = base.alias("ga"), base.alias("gb")
+    pairs = cands.join(ga, F.col("id_a") == F.col("ga.id")).join(
+        gb, F.col("id_b") == F.col("gb.id")
     )
-    gb = base.select(
-        F.col("id").alias("id_b"), F.col("grams").alias("grams_b"), F.col("sz").alias("szb")
-    )
-    pairs = cands.join(ga, "id_a").join(gb, "id_b")
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
+    inter = F.size(F.array_intersect("ga.grams", "gb.grams"))
     # |A ∪ B| = |A| + |B| - |A ∩ B| — the sets' sizes are already columns,
     # so the per-pair array_union hash-build (the other half of the verify
     # CPU) is pure waste; integer identity, bit-identical jaccard (r6)
-    jac = inter.cast("double") / (F.col("sza") + F.col("szb") - inter)
-    out = (
+    jac = inter.cast("double") / (F.col("ga.sz") + F.col("gb.sz") - inter)
+    return (
         pairs.select("id_a", "id_b", jac.alias("jaccard_raw"))
         .filter(F.col("jaccard_raw") >= threshold)
         # engine-agnostic HALF_UP (see functions/text.py round_sql)
@@ -334,7 +292,6 @@ def ngram_jaccard_pairs(
         )
         .select("id_a", "id_b", "jaccard")
     )
-    return _scoped_release(out, base, ranked)
 
 
 # --- MinHash + LSH -------------------------------------------------------------------
@@ -712,8 +669,10 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, signature: array<long>).
 
-    Tiers: ``jvm`` (default, pure codegen — see ``_minhash_signatures_jvm``)
-    and ``md5`` (DuckDB-recomputable oracle tier, vectorized numpy).
+    Tiers: ``jvm`` (default: one ``mapInArrow`` numpy kernel whose values
+    are bit-identical to the JVM xxhash64 expression chain — see
+    ``_minhash_signatures_jvm``) and ``md5`` (DuckDB-recomputable oracle
+    tier, ``mapInPandas``).
 
     Permutation family: both tiers use an avalanche mix (xxhash64 /
     md5), which is what the banding probability model
@@ -840,17 +799,21 @@ def minhash_lsh_pairs(
     """Candidate near-dup pairs via LSH banding, verified by signature
     agreement (estimated Jaccard = fraction of matching minhashes ≥ threshold).
 
-    Plan shape (the 100 TB shape): signatures (1 narrow row/doc) → explode to
-    ``bands`` rows/doc → groupBy band-hash bucket (one shuffle of ids +
-    8B hashes, map-side combined) → in-row pair expansion per bucket →
-    distinct pairs → verify. Text never shuffles.
+    Plan shape: signatures (1 row/doc) → explode to ``bands`` rows/doc →
+    groupBy band-hash bucket (``_bucket_pairs``, one shuffle) → in-row pair
+    expansion and verify → distinct verified pairs. Text never shuffles.
+    Each band row carries its doc's whole signature (num_perm longs), so the
+    shuffle is ~``bands * num_perm * 8`` bytes per doc instead of 8-byte
+    hashes plus two signature re-attach joins: the signature kernel runs
+    once and nothing is persisted (Spark ML's
+    ``MinHashLSH.approxSimilarityJoin`` makes the same trade).
     """
     rows = num_perm // bands
     if rows == 0:
         raise ValueError(
             f"bands ({bands}) > num_perm ({num_perm}): every band slice "
             f"would be empty, every document would share every bucket, and "
-            f"the candidate self-join degenerates to an O(n^2) cross product"
+            f"the candidate step degenerates to an O(n^2) cross product"
         )
     if num_perm % bands:
         raise ValueError(
@@ -860,7 +823,7 @@ def minhash_lsh_pairs(
         )
     sigs = minhash_signatures(
         df, text_col, id_col, num_perm, shingle_n, seed, token_hash
-    ).withColumn("_callgen", _call_salt()).persist()
+    )
 
     # band bucket id: xxhash64 (8B shuffle payload, the at-scale default) or
     # md5 (32B, DuckDB-recomputable — the oracle-parity hook). ONE slice
@@ -877,57 +840,31 @@ def minhash_lsh_pairs(
         ),
     )
     bucket = F.xxhash64(joined) if band_hash == "xxhash64" else F.md5(joined)
-    banded = (
-        sigs.select(
-            "id", "signature",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        )
-        .select("id", "band", bucket.alias("bucket"))
-    )
+    banded = sigs.select(
+        "id", "signature",
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+    ).select("id", "signature", "band", bucket.alias("bucket"))
 
-    # Candidate pairs via ONE grouped aggregation instead of the r5 bucket
-    # self-join (r6b): the join shuffled the banded rows TWICE (both sides
-    # of the equi-join) and sorted each; the groupBy ships them once
-    # (map-side combinable collect_list) and each member pairs with its
-    # tail in-row. array_distinct + sort_array make id_a < id_b by
-    # construction, also when a doc id repeats in the input (it lands twice
-    # in a bucket and would otherwise pair with itself). Skew bound:
-    # a bucket of k ids emits k rows carrying O(k) arrays each — per-ROW
-    # memory is O(bucket), never O(bucket^2) (the giant-duplicate-group
-    # case degrades exactly like the join's k^2 output rows, without a
-    # single holder row). Candidate set identical by construction; pinned
-    # by the tier-agreement and oracle-twin tests.
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.array_distinct(F.collect_list("id"))).alias("_ids"))
-        .filter(F.size("_ids") > 1)
-    )
-    cand = (
-        buckets.select("_ids", F.posexplode("_ids").alias("_pos", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("_ids", F.col("_pos") + 2, F.size("_ids"))
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
-
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b"))
+    # A doc id that repeats in the input lands twice in its buckets; the
+    # strict id order drops its (id, id) pairs.
+    pairs = _bucket_pairs(
+        banded, ["band", "bucket"], F.struct("id", "signature")
+    ).filter(F.col("a.id") < F.col("b.id"))
     est = F.size(
         F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+            F.zip_with("a.signature", "b.signature", lambda x, y: x == y),
             lambda eq: eq,
         )
     ).cast("double") / F.lit(float(num_perm))
-    out = (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("est_jaccard", est)
+    return (
+        pairs.select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            est.alias("est_jaccard"),
+        )
         .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+        .distinct()
     )
-    return _scoped_release(out, sigs)
 
 
 # --- SimHash -----------------------------------------------------------------------
@@ -995,9 +932,7 @@ def simhash_pairs(
     ≤ k differing bits shares at least one identical chunk, so banding has
     perfect recall for the requested ``max_hamming`` (capped at 16 chunks —
     beyond that candidate volume outweighs the recall gain at scale)."""
-    sigs = simhash_signatures(df, text_col, id_col, token_hash).withColumn(
-        "_callgen", _call_salt()
-    ).persist()
+    sigs = simhash_signatures(df, text_col, id_col, token_hash)
     n_chunks = min(max_hamming + 1, 16)
     width = 64 // n_chunks
     # chunk i covers bits [i*width, (i+1)*width), last chunk takes the remainder
@@ -1013,28 +948,19 @@ def simhash_pairs(
         "simhash",
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk"),
     )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
+    pairs = _bucket_pairs(
+        chunks, ["chunk_idx", "chunk"], F.struct("id", "simhash")
+    ).filter(F.col("a.id") < F.col("b.id"))
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return (
+        pairs.select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
+            hamming.alias("hamming"),
         )
+        .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    out = cand.withColumn("hamming", hamming).filter(
-        F.col("hamming") <= max_hamming
-    ).select("id_a", "id_b", "hamming")
-    return _scoped_release(out, sigs)
 
 
 # --- winnowing fingerprints --------------------------------------------------------
@@ -1070,7 +996,7 @@ def winnow_fingerprints(
     signature path; a pure higher-order-function formulation re-inlines the
     normalization regexp per character and is quadratic). No per-row Python
     arithmetic. At scale the output is the narrow shape you want: downstream
-    self-join/groupBy shuffles only (int64, id) pairs, never text.
+    grouping shuffles only (int64, id) pairs, never text.
     """
     p = _WINNOW_P
 
@@ -1113,27 +1039,20 @@ def winnow_overlap_pairs(
     local-overlap / containment detection (MOSS-style), complementary to
     MinHash (which measures whole-document resemblance).
 
-    Plan shape: explode → optional document-frequency cap (a fingerprint in
-    > ``max_df`` docs is a stop-gram: boilerplate that would fan out
-    quadratically; dropping it bounds per-fingerprint join fan-out, the same
-    df-cap discipline as ``ngram_jaccard_pairs``) → fingerprint-equality
-    self-join (id < id) → groupBy pair count. Shuffles ids + 8-byte
-    fingerprints only.
+    Plan shape: explode → group ids per fingerprint (``_bucket_pairs``; the
+    optional document-frequency cap drops a fingerprint in > ``max_df``
+    docs in the same aggregate — a stop-gram: boilerplate that would fan
+    out quadratically, the same df-cap discipline as
+    ``ngram_jaccard_pairs``) → in-row pairs (id < id) → groupBy pair count.
+    Shuffles ids + 8-byte fingerprints only.
     """
     fps = winnow_fingerprints(df, text_col, id_col, k, w)
-    if max_df is not None:
-        keep = fps.groupBy("fingerprint").agg(F.count("*").alias("_df")).filter(
-            F.col("_df") <= max_df
-        )
-        fps = fps.join(keep.select("fingerprint"), "fingerprint")
-    a, b = fps.alias("a"), fps.alias("b")
+    # no array_distinct: a pair is counted once per (row of a, row of b)
+    # sharing a fingerprint, the multiset a fingerprint equi-join gives
+    pairs = _bucket_pairs(fps, ["fingerprint"], F.col("id"), max_df)
     return (
-        a.join(
-            b,
-            (F.col("a.fingerprint") == F.col("b.fingerprint"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        pairs.filter(F.col("a") < F.col("b"))
+        .groupBy(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .agg(F.count("*").alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )

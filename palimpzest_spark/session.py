@@ -18,7 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the cores this process may run on, not the host's: a pinned or
+# containerized process would otherwise oversubscribe
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 
 def get_spark(
@@ -29,7 +31,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``. ``shuffle_partitions``
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to the cores this
+    process may run on when the variable is unset. ``shuffle_partitions``
     defaults to the local core count — at cluster scale callers pass a value
     proportional to total executor cores.
     """

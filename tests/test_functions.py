@@ -436,6 +436,33 @@ def test_winnow_max_df_stop_grams(spark):
     )
 
 
+_PAIR_PLANS = {
+    # name: (pair plan on the ``docs`` fixture, Spark-job budget)
+    "minhash_lsh_pairs": (lambda d: dedup.minhash_lsh_pairs(d, threshold=0.5), 3),
+    "simhash_pairs": (lambda d: dedup.simhash_pairs(d, max_hamming=6), 3),
+    "winnow_overlap_pairs": (
+        lambda d: dedup.winnow_overlap_pairs(d, k=8, w=4, min_shared=1, max_df=4), 3
+    ),
+    "ngram_jaccard_pairs": (lambda d: dedup.ngram_jaccard_pairs(d, threshold=0.5), 6),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAIR_PLANS))
+def test_pair_plan_persists_nothing_within_job_budget(spark, docs, name):
+    """A pair function returns a plain lazy plan: collecting it leaves
+    Spark's cache empty and starts at most its pinned number of jobs, so a
+    new persist, collect or count fails here."""
+    plan, budget = _PAIR_PLANS[name]
+    spark.catalog.clearCache()
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(sched.nextJobId())
+    rows = plan(docs).collect()
+    jobs = int(sched.nextJobId()) - j0
+    assert rows, "vacuous: the plan found no pairs"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert jobs <= budget, f"{name} started {jobs} Spark jobs"
+
+
 def test_jsonl_csv_sources_roundtrip_and_corrupt(spark, tmp_path):
     """jsonl_files/csv_files: lossless free-text roundtrip; corrupt JSONL
     lines surface in _corrupt_record instead of failing the scan."""

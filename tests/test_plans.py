@@ -123,3 +123,24 @@ def test_asof_join_tie_on_right_ts_is_deterministic(spark):
         assert len(out) == 1
         outs.add(out[0]["payload"])
     assert outs == {"b"}, outs  # max struct (rts, payload) wins, always
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("topk_per_group", 5),
+        ("dedup_minhash_docs", 6),
+        ("text_repetition_stats", 6),
+        ("sem_topk_attach_oracle", 7),
+        ("pack_sequences_oracle", 5),
+    ],
+)
+def test_query_suite_job_budget(spark, name, budget):
+    """Building and running each query the query_suite benchmark times (to
+    the noop sink, as the benchmark does) starts at most its pinned number
+    of Spark jobs, footer reads included: a new collect or count fails."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(sched.nextJobId())
+    QUERIES[name](spark, SF_TEST).write.format("noop").mode("overwrite").save()
+    jobs = int(sched.nextJobId()) - j0
+    assert jobs <= budget, f"{name} started {jobs} Spark jobs"
