@@ -1,9 +1,10 @@
 """CDC / incremental-ingest engine (the BASELINE.json north rule).
 
 Pipeline: binlog/WAL-style change feed → Arrow schema reconciliation →
-vectorized decode/normalize → salted repartition on hot keys → in-batch
-last-writer-wins dedup → idempotent version-guarded MERGE into a
-snapshot-committed lake table → per-partition lineage + throughput metrics.
+vectorized decode/normalize → in-batch last-writer-wins dedup → idempotent
+version-guarded MERGE into a snapshot-committed lake table (an AQE-rebalanced
+write per bucket, so a hot key splits across tasks) → per-partition lineage
++ throughput metrics.
 
 Modules:
 - ``lake``       : SnapshotLakeTable — parquet data files + atomic JSON

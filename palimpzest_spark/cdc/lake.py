@@ -83,7 +83,7 @@ def _rebase_summary(ours: dict, theirs: dict) -> dict:
     including per-key in the txn watermark map, since ``ours`` carries the
     plan-time (possibly stale) view of OTHER writers' entries and must not
     regress an entry the competitor just advanced. Per-batch advisory
-    fields (batch_lineage/batch_events/fused_clean) stay ``ours`` — so a
+    fields (batch_lineage/batch_events) stay ``ours`` — so a
     MAINTENANCE rebase (whose ``summary`` is a validation-time copy of an
     OLDER snapshot's, not a new batch's) must pass the competitor's summary
     as ``ours`` or it would regress the advisory fields the next merge's

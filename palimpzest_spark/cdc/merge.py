@@ -30,13 +30,17 @@ Per batch:
    this becomes ``MERGE INTO ... WHEN MATCHED AND (s.ts, s.event_seq) >
    (t.ts, t.event_seq) THEN UPDATE ...`` (CoW) / v2 equality-deletes (MoR);
    the surrounding pipeline is identical.
-6. **Salted write repartition** — the rewrite shuffles on ``(_bucket,
-   salt)`` rather than ``_bucket`` alone: a hot conv_id concentrates a
-   bucket, and one-task-per-bucket would serialize it. Salting fans each
-   bucket across ``write_salt`` tasks (files per bucket simply multiply —
-   the snapshot tracks lists).
+6. **Skew-immune write** — every write is hinted ``rebalance`` on
+   ``_bucket``: AQE splits a hot bucket across tasks and coalesces a tiny
+   batch, so write width tracks data volume at any batch size.
 7. **Lineage + metrics** — per-source-partition event counts and max
-   offsets, recorded in the snapshot summary and returned to the caller.
+   offsets, recorded in the snapshot summary and returned to the caller,
+   with the path the batch took (``path``) and any optimistic attempt it
+   aborted on the way (``aborts``).
+
+Two paths apply a batch (``_merge_once``): the steady **delta-first** write,
+and the **planned** merge — one grid pre-job, then either a known-schema
+write behind an exact observed gate or exact Arrow inference.
 """
 
 from __future__ import annotations
@@ -45,7 +49,7 @@ import logging
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -155,30 +159,40 @@ def _anomaly_expr(table_public: T.StructType):
     return (F.col("payload").isNotNull() & reduce(lambda a, b: a | b, bads)).cast("long")
 
 
-def _value_cols(public: T.StructType, payload_schema: T.StructType | None) -> list:
-    # try_cast throughout: under ANSI a misfitting value must surface as the
-    # anomaly/widening signal (fused path aborts, two-pass widens), never as
-    # a job-killing CAST_OVERFLOW inside the merge action
-    cols = []
+def _upsert_cols(public: T.StructType, payload_schema: T.StructType | None,
+                 n_buckets: int, cast: str) -> list:
+    """The table row of one decoded event (payload struct ``_p``): the value
+    columns in ``public`` order, then the meta columns. ``cast`` names the
+    Column method that types each value. The known-schema decode passes
+    ``"try_cast"``: under ANSI a misfitting value must surface as the anomaly
+    signal the observed gate aborts on, never as a job-killing CAST_OVERFLOW
+    inside the write. The inferred decode passes ``"cast"``: its schema was
+    reconciled from this very batch, so a failing cast is a reconcile bug and
+    must fail loudly."""
     turn_t = next(f.dataType for f in public.fields if f.name == "turn_idx")
+    cols = []
     for f in public.fields:
         if f.name == "conv_id":
-            cols.append(F.col("conv_id").cast("string").alias("conv_id"))
+            col = F.col("conv_id").cast("string")
         elif f.name == "turn_idx":
-            cols.append(F.col("turn_idx").try_cast(turn_t).alias("turn_idx"))
+            col = getattr(F.col("turn_idx"), cast)(turn_t)
         elif payload_schema is not None and f.name in payload_schema.fieldNames():
-            col = F.col(f"_p.{f.name}").try_cast(f.dataType)
+            col = getattr(F.col(f"_p.{f.name}"), cast)(f.dataType)
             if f.name == "text":
                 col = normalize_text_udf(col)  # pandas/Arrow UDF, never per-row
-            cols.append(col.alias(f.name))
         else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return cols
+            col = F.lit(None).cast(f.dataType)
+        cols.append(col.alias(f.name))
+    return cols + [
+        F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int").alias("_bucket"),
+        F.col("ts").alias("_ts"),
+        F.col("event_seq").alias("_event_seq"),
+        (F.col("op") == "D").alias("_deleted"),
+    ]
 
 
 def _fold_summary(table: SnapshotLakeTable, batch_id: int, lineage: dict,
-                  n_events: int, n_parts: int, fused_clean: bool = False,
-                  writer_id: str | None = None,
+                  n_events: int, n_parts: int, writer_id: str | None = None,
                   base: dict | None = None) -> dict:
     """Next snapshot's summary, derived from ``base`` — the SAME snapshot
     the commit CAS anchors on (a concurrent writer between plan and publish
@@ -201,7 +215,6 @@ def _fold_summary(table: SnapshotLakeTable, batch_id: int, lineage: dict,
         "batch_lineage": lineage,
         "batch_events": n_events,
         "n_source_partitions": max(int(prev.get("n_source_partitions", 0)), n_parts),
-        "fused_clean": fused_clean,
     }
 
 
@@ -210,7 +223,6 @@ def merge_batch(
     table: SnapshotLakeTable,
     batch: DataFrame,
     batch_id: int,
-    write_salt: int = 4,
     writer_id: str | None = None,
 ) -> dict[str, Any]:
     """Apply one microbatch. Returns metrics (also folded into the snapshot).
@@ -258,6 +270,12 @@ def merge_batch(
     raise last_err  # type: ignore[misc]
 
 
+class _Abort(Exception):
+    """An optimistic write's observed gate refused the batch. Raised inside
+    the write's ``try``, so its uncommitted files are aborted on the way out;
+    the message is the reason recorded in the result's ``aborts``."""
+
+
 def _merge_once(
     spark: SparkSession,
     table: SnapshotLakeTable,
@@ -268,28 +286,26 @@ def _merge_once(
 ) -> dict[str, Any]:
     """One merge attempt against the current snapshot (see merge_batch).
 
-    Three execution paths, picked from the MANIFEST (driver-side, no job):
+    Two execution paths, picked from the MANIFEST (driver-side, no job):
 
     - **delta-first single job** (steady state: known schema/geometry and the
       previous batch was ≤ 1/4 of the table): decode, LWW fold, and the
       merge-on-read delta write run as ONE observed action — no pre-job at
-      all. The exact anomaly gate rides the write (CollectMetrics); on any
-      schema drift the optimistic files are aborted and the batch reruns
-      exact. Compaction of overflowing buckets follows as a separate,
-      amortized job (``lake.compact``). Per-batch fixed cost = 1 job + the
-      commit — the smallest serial fraction, which is what the N→4N scaling
-      efficiency is made of.
-    - **grid-fused** (bootstrap / batch≈table / unknown geometry): one cheap
-      pre-job builds an exact (partition × bucket) grid — counts, offset
-      high-waters, max turn_idx — with a STRIDED payload-anomaly sample
-      riding along; the grid feeds lineage AND the CoW/MoR plan, then the
-      optimistic write runs with the exact anomaly gate. When the batch
-      rivals the table this plans inline compaction (= copy-on-write), the
-      right plan for bootstrap-regime batches.
-    - **two-pass exact** (first write / schema evolution): exact Arrow
-      schema inference then the merge write. When the grid already exists
-      (strided sample caught the evolution, or the fused gate aborted) it is
-      REUSED for lineage — the batch is never scanned twice for metadata.
+      all. The exact anomaly gate and the geometry check ride the write
+      (CollectMetrics); on schema drift or a new source partition the
+      optimistic files are aborted and the batch takes the planned merge.
+      Compaction of overflowing buckets follows as a separate, amortized job
+      (``lake.compact``). Per-batch fixed cost = 1 job + the commit — the
+      smallest serial fraction, which is what the N→4N scaling efficiency is
+      made of.
+    - **planned** (first write / bootstrap-regime batch ≈ table / unknown
+      geometry / a delta-first abort): one cheap pre-job builds the exact
+      (partition × bucket) grid for lineage and the per-bucket CoW/MoR plan,
+      then the batch decodes with the table's known schema behind an exact
+      observed gate, or with its exact Arrow-inferred schema
+      (``_merge_planned``). When the batch rivals the table the plan is
+      inline compaction (= copy-on-write), the right plan for
+      bootstrap-regime batches.
     """
     snap = table.snapshot()
     # adopt the planning snapshot's bucket count / sort order: another
@@ -298,34 +314,20 @@ def _merge_once(
     table.refresh_properties(snap)
     prev = snap["summary"]
     public = _public_schema(table)
-    if public is None:
-        return _merge_twopass(spark, table, batch, batch_id, t0,
-                              writer_id=writer_id, base=snap)
-
-    n_parts = int(prev.get("n_source_partitions", 0) or 0)
-    est_events = int(prev.get("batch_events", 0) or 0)
-    table_rows = sum(int(s.get("rows", 0)) for s in snap["filestats"].values())
-    if n_parts > 0 and 0 < est_events * 4 <= table_rows:
-        out = _merge_delta_first(spark, table, batch, batch_id, public, n_parts,
-                                 t0, writer_id=writer_id, base=snap)
-        if out is not None:
-            return out
-        log.debug("[merge %s] delta-first aborted (schema anomaly) %.1fs "
-                  "— exact two-pass", batch_id, time.perf_counter() - t0)
-        return _merge_twopass(spark, table, batch, batch_id, t0,
-                              writer_id=writer_id, base=snap)
-
-    grid = _pre_grid(spark, table, batch, public)
-    if grid["n_events"] == 0:
-        return {"batch_id": batch_id, "skipped": False, "events": 0, "elapsed_sec": 0.0}
-    if grid["anomalies_sampled"] == 0:
-        out = _merge_fused(spark, table, batch, batch_id, public, grid, t0,
-                           writer_id=writer_id, base=snap)
-        if out is not None:
-            return out
-        log.debug("[merge %s] fused gate aborted (schema anomaly) %.1fs "
-                  "— exact two-pass (grid reused)", batch_id, time.perf_counter() - t0)
-    return _merge_twopass(spark, table, batch, batch_id, t0, grid=grid,
+    aborts: list[str] = []
+    if public is not None:
+        n_parts = int(prev.get("n_source_partitions", 0) or 0)
+        est_events = int(prev.get("batch_events", 0) or 0)
+        table_rows = sum(int(s.get("rows", 0)) for s in snap["filestats"].values())
+        if n_parts > 0 and 0 < est_events * 4 <= table_rows:
+            try:
+                return _merge_delta_first(spark, table, batch, batch_id, public, n_parts,
+                                          t0, writer_id=writer_id, base=snap)
+            except _Abort as e:
+                aborts.append(f"delta_first:{e}")
+                log.debug("[merge %s] delta-first aborted (%s) %.1fs — planned merge",
+                          batch_id, e, time.perf_counter() - t0)
+    return _merge_planned(spark, table, batch, batch_id, public, aborts, t0,
                           writer_id=writer_id, base=snap)
 
 
@@ -333,34 +335,38 @@ def _pre_grid(
     spark: SparkSession,
     table: SnapshotLakeTable,
     batch: DataFrame,
-    public: T.StructType,
+    public: T.StructType | None,
 ) -> dict[str, Any]:
     """ONE cheap pre-job: the exact (source-partition × bucket) grid of the
     batch — event counts, per-partition offset high-waters, max turn_idx —
     plus a STRIDED payload-anomaly sample (every 64th event_seq parses its
     payload; CASE short-circuits the rest). The grid is exact for lineage
-    and the CoW/MoR plan; only the anomaly signal is sampled, and the fused
-    write's observed metrics re-check it exactly. Grid size is n_parts ×
-    n_buckets tiny rows — driver-safe at any scale."""
-    turn_t = next(f.dataType for f in public.fields if f.name == "turn_idx")
-    sampled = F.pmod(F.xxhash64("event_seq"), F.lit(64)) == 0
-    pre = batch.withColumn(
-        "_m", F.when(sampled, F.from_json("payload", "map<string,string>"))
-    ).select(
-        F.col("partition"),
-        F.pmod(F.xxhash64("conv_id"), F.lit(table.n_buckets)).cast("int").alias("_b"),
-        F.col("offset"),
-        F.col("turn_idx").alias("_turn"),
-        F.when(
+    and the CoW/MoR plan; only the anomaly signal is sampled, and the
+    known-schema write's observed metrics re-check it exactly. A table with
+    no schema yet (``public`` None: the first write) has nothing to sample
+    against. Grid size is n_parts × n_buckets tiny rows — driver-safe at any
+    scale."""
+    sample = F.lit(0)
+    if public is not None:
+        turn_t = next(f.dataType for f in public.fields if f.name == "turn_idx")
+        sampled = F.pmod(F.xxhash64("event_seq"), F.lit(64)) == 0
+        batch = batch.withColumn(
+            "_m", F.when(sampled, F.from_json("payload", "map<string,string>"))
+        )
+        sample = F.when(
             sampled,
             _anomaly_expr(public)
             + (
                 F.col("turn_idx").isNotNull()
                 & F.col("turn_idx").try_cast(turn_t).isNull()
             ).cast("long"),
-        )
-        .otherwise(F.lit(0))
-        .alias("_sa"),
+        ).otherwise(F.lit(0))
+    pre = batch.select(
+        F.col("partition"),
+        F.pmod(F.xxhash64("conv_id"), F.lit(table.n_buckets)).cast("int").alias("_b"),
+        F.col("offset"),
+        F.col("turn_idx").alias("_turn"),
+        sample.alias("_sa"),
     )
     cells = (
         pre.groupBy("partition", "_b")
@@ -415,7 +421,9 @@ def _decode_known(batch: DataFrame, public: T.StructType, table: SnapshotLakeTab
     decode reuses that map via getItem + try_cast — half the JSON-parse CPU
     of a second ``from_json``. ``_anom`` counts rows that provably do NOT
     fit the current schema (unknown keys, failed try_cast) and an envelope
-    term catches a payload-less delete whose turn_idx needs widening."""
+    term catches a payload-less delete whose turn_idx needs widening.
+    Returns ``(decoded, upsert_cols, gate)``; ``gate`` is the ``events`` and
+    exact ``anomalies`` aggregates a write observes on ``decoded``."""
     key = ("decode", public.json(), table.n_buckets)
     cached = _EXPR_CACHE.get(key)
     if cached is None:
@@ -441,23 +449,21 @@ def _decode_known(batch: DataFrame, public: T.StructType, table: SnapshotLakeTab
         env_anom = (
             F.col("turn_idx").isNotNull() & F.col("turn_idx").try_cast(turn_t).isNull()
         )
-        upsert_cols = [
-            *_value_cols(public, payload_schema),
-            F.pmod(F.xxhash64("conv_id"), F.lit(table.n_buckets)).cast("int").alias("_bucket"),
-            F.col("ts").alias("_ts"),
-            F.col("event_seq").alias("_event_seq"),
-            (F.col("op") == "D").alias("_deleted"),
+        gate = [
+            F.count(F.lit(1)).alias("events"),
+            (F.sum("_anom") + F.sum(env_anom.cast("long"))).alias("anomalies"),
         ]
+        upsert_cols = _upsert_cols(public, payload_schema, table.n_buckets, "try_cast")
         if len(_EXPR_CACHE) > 32:
             _EXPR_CACHE.clear()
-        cached = _EXPR_CACHE[key] = (map_col, anom_col, p_col, env_anom, upsert_cols)
-    map_col, anom_col, p_col, env_anom, upsert_cols = cached
+        cached = _EXPR_CACHE[key] = (map_col, anom_col, p_col, gate, upsert_cols)
+    map_col, anom_col, p_col, gate, upsert_cols = cached
     decoded = (
         batch.withColumn("_m", map_col)
         .withColumn("_anom", anom_col)
         .withColumn("_p", p_col)
     )
-    return decoded, env_anom, upsert_cols
+    return decoded, upsert_cols, gate
 
 
 def _await_observation(obs, decoded, metrics) -> dict:
@@ -486,37 +492,32 @@ def _merge_delta_first(
     t0: float,
     writer_id: str | None = None,
     base: dict | None = None,
-) -> dict[str, Any] | None:
+) -> dict[str, Any]:
     """Steady-state merge: ONE observed job, zero pre-jobs.
 
     decode → in-batch LWW fold → merge-on-read delta write for EVERY touched
     bucket, with lineage (per-source-partition counts + offset high-waters),
     the exact anomaly count, and the geometry check collected by a
     CollectMetrics node riding the write scan. Nothing is committed until
-    the observed metrics prove the batch fits the known schema; on drift the
-    files are aborted (Iceberg's uncommitted-snapshot discipline) and the
-    caller reruns the exact path. Returns None on abort.
+    the observed metrics prove the batch fits the known schema and source
+    partitions; otherwise the files are aborted (Iceberg's
+    uncommitted-snapshot discipline) and ``_Abort`` carries the reason —
+    ``anomaly`` or ``new_partition`` — to the planned merge.
 
     Bucket overflow (accumulated delta rows ≥ ratio·base, or the delta-file
     cap) is then compacted as a SEPARATE amortized job — per-batch write
     cost stays O(batch), the compaction bound is lake.plan_compaction's
     amortized-constant argument, and the common batch is exactly one Spark
     job + one manifest commit."""
-    from pyspark.sql import Observation
-
     full = _full_schema(public)
     cols = [f.name for f in full.fields]
-    decoded, env_anom, upsert_cols = _decode_known(batch, public, table)
+    decoded, upsert_cols, gate = _decode_known(batch, public, table)
 
     obs = Observation()
     mkey = ("metrics", public.json(), n_parts)
     metrics = _EXPR_CACHE.get(mkey)
     if metrics is None:
-        metrics = [
-            F.count(F.lit(1)).alias("events"),
-            (F.sum("_anom") + F.sum(env_anom.cast("long"))).alias("anomalies"),
-            F.max("partition").alias("max_part"),
-        ]
+        metrics = [*gate, F.max("partition").alias("max_part")]
         for p in range(n_parts):
             is_p = F.col("partition") == p
             metrics.append(F.sum(is_p.cast("long")).alias(f"ev_{p}"))
@@ -539,9 +540,10 @@ def _merge_delta_first(
         n_events = int(m["events"] or 0)
         anomalies = int(m["anomalies"] or 0)
         max_part = -1 if m["max_part"] is None else int(m["max_part"])
-        if anomalies > 0 or max_part >= n_parts:
-            table.abort_files(out_rel)
-            return None
+        if anomalies > 0:
+            raise _Abort("anomaly")
+        if max_part >= n_parts:
+            raise _Abort("new_partition")
         if n_events == 0:
             table.abort_files(out_rel)
             return {"batch_id": batch_id, "skipped": False, "events": 0,
@@ -560,7 +562,7 @@ def _merge_delta_first(
         if int(m[f"ev_{p}"] or 0) > 0
     }
     summary = _fold_summary(table, batch_id, lineage, n_events, n_parts,
-                            fused_clean=True, writer_id=writer_id, base=base)
+                            writer_id=writer_id, base=base)
     try:
         table.commit_merge([], {}, new_files, stats, full.jsonValue(), summary,
                            base_snapshot=base)
@@ -606,210 +608,66 @@ def _merge_delta_first(
         "compacted_buckets": len(overflow),
         "compact_sec": round(compact_sec, 3),
         "delta_buckets": len(new_files),
-        "fused": True,
+        "path": "delta_first",
+        "aborts": [],
         "lineage": lineage,
         "elapsed_sec": elapsed,
         "events_per_sec": n_events / elapsed if elapsed > 0 else 0.0,
     }
 
 
-def _merge_fused(
+def _merge_planned(
     spark: SparkSession,
     table: SnapshotLakeTable,
     batch: DataFrame,
     batch_id: int,
-    public: T.StructType,
-    grid: dict[str, Any],
+    public: T.StructType | None,
+    aborts: list[str],
     t0: float,
-    writer_id: str | None = None,
-    base: dict | None = None,
-) -> dict[str, Any] | None:
-    """Bootstrap-regime merge: grid-planned CoW/MoR write + exact gate.
-
-    Lineage, the CoW/MoR plan, and the batch geometry all come from the
-    exact pre-grid — the observed metrics only re-check the (sampled)
-    anomaly signal exactly. The CoW/MoR split uses the batch's TRUE
-    per-bucket counts, so only touched buckets are written; untouched
-    buckets carry forward by manifest reference. Returns None (after
-    aborting the uncommitted files) if the exact anomaly count is non-zero —
-    the caller reruns two-pass, reusing the grid."""
-    from pyspark.sql import Observation
-
-    full = _full_schema(public)
-    cols = [f.name for f in full.fields]
-    decoded, env_anom, upsert_cols = _decode_known(batch, public, table)
-    obs = Observation()
-    metrics = [
-        F.count(F.lit(1)).alias("events"),
-        (F.sum("_anom") + F.sum(env_anom.cast("long"))).alias("anomalies"),
-    ]
-    decoded = decoded.observe(obs, *metrics)
-    upserts = decoded.select(*upsert_cols)
-
-    cow, mor = table.plan_compaction(grid["by_bucket"])
-    out_rels: list[str] = []
-    cow_files: dict = {}
-    mor_files: dict = {}
-    stats: dict = {}
-    t_plan = time.perf_counter()
-    t_cow = t_mor = t_plan
-    try:
-        if cow:
-            existing = table.read_raw(
-                spark, cow, version=None if base is None else base["version"]
-            )
-            part = align_to(upserts.filter(F.col("_bucket").isin(cow)), full)
-            merged_in = part if existing is None else align_to(existing, full).unionByName(part)
-            rel, cow_files, s = table.write_files(
-                _lww(merged_in, cols).hint("rebalance", "_bucket"), cow
-            )
-            out_rels.append(rel)
-            stats.update(s)
-            t_cow = time.perf_counter()
-        if mor:
-            part = align_to(upserts.filter(F.col("_bucket").isin(mor)), full)
-            rel, mor_files, s = table.write_files(
-                _lww(part, cols).hint("rebalance", "_bucket"), mor
-            )
-            out_rels.append(rel)
-            stats.update(s)
-            t_mor = time.perf_counter()
-        m = _await_observation(obs, decoded, metrics)
-        if int(m["anomalies"] or 0) > 0:
-            for rel in out_rels:
-                table.abort_files(rel)
-            return None
-    except Exception:
-        for rel in out_rels:
-            table.abort_files(rel)
-        raise
-
-    n_events = grid["n_events"]
-    t_now = time.perf_counter()
-    log.debug("[merge %s] fused phases: cow_write=%.1fs mor_write=%.1fs obs=%.1fs "
-              "total=%.1fs (cow=%d mor=%d)", batch_id, max(t_cow - t_plan, 0),
-              max(t_mor - max(t_cow, t_plan), 0), t_now - max(t_mor, t_cow, t_plan),
-              t_now - t0, len(cow), len(mor))
-    try:
-        table.commit_merge(
-            cow, cow_files, mor_files, stats, full.jsonValue(),
-            _fold_summary(table, batch_id, grid["lineage"], n_events, grid["n_parts"],
-                          fused_clean=True, writer_id=writer_id, base=base),
-            base_snapshot=base,
-        )
-    except Exception:
-        for rel in out_rels:  # lost CAS race: leave no orphan files
-            table.abort_files(rel)
-        raise
-    elapsed = time.perf_counter() - t0
-    log.debug("[merge %s] fused commit done %.1fs (%d ev)", batch_id, elapsed, n_events)
-    return {
-        "batch_id": batch_id,
-        "skipped": False,
-        "events": n_events,
-        "affected_buckets": len(cow) + len(mor),
-        "compacted_buckets": len(cow),
-        "delta_buckets": len(mor),
-        "fused": True,
-        "lineage": grid["lineage"],
-        "elapsed_sec": elapsed,
-        "events_per_sec": n_events / elapsed if elapsed > 0 else 0.0,
-    }
-
-
-def _merge_twopass(
-    spark: SparkSession,
-    table: SnapshotLakeTable,
-    batch: DataFrame,
-    batch_id: int,
-    t0: float,
-    grid: dict[str, Any] | None = None,
     writer_id: str | None = None,
     base: dict | None = None,
 ) -> dict[str, Any]:
-    """Exact path — first write and schema-evolution batches.
+    """Grid-planned merge: first write, bootstrap regime, delta-first abort.
 
-    With ``grid`` (handed down when the strided sample or the fused gate
-    already flagged the batch), the lineage/bucket/turn metadata is REUSED
-    and the batch goes straight to exact Arrow schema inference — no second
-    metadata scan. Without it (first-ever write), one pre-pass job computes
-    lineage AND the exact schema-fit check, grouped (partition, bucket) so
-    the combine stays map-side."""
-    if grid is not None:
-        lineage_rows = [
-            {"partition": int(k), "events": v["events"], "max_offset": v["max_offset"]}
-            for k, v in grid["lineage"].items()
-        ]
-        n_events = grid["n_events"]
-        if n_events == 0:
-            return {"batch_id": batch_id, "skipped": False, "events": 0,
-                    "elapsed_sec": 0.0}
-        batch_rows_by_bucket = dict(grid["by_bucket"])
-        affected = sorted(batch_rows_by_bucket)
-        max_turn = grid["max_turn"]
-        # the grid's anomaly signal (or the fused exact gate) already proved
-        # the known schema does NOT fit — exact Arrow inference, always
-        payload_schema = infer_payload_schema(batch)
-    else:
-        table_public_pre = _public_schema(table)
-        bucket_expr = F.pmod(F.xxhash64("conv_id"), F.lit(table.n_buckets)).cast("int")
-        pre_cols = [
-            F.col("partition"),
-            bucket_expr.alias("_b"),
-            F.col("offset"),
-            F.col("payload"),
-        ]
-        anomaly_expr = None
-        if table_public_pre is not None:
-            pre_cols.append(F.from_json("payload", "map<string,string>").alias("_m"))
-            anomaly_expr = _anomaly_expr(table_public_pre)
-        pre_cols.append(F.col("turn_idx").alias("_turn"))
-        pre = batch.select(*pre_cols)
-        aggs = [
-            F.count(F.lit(1)).alias("events"),
-            F.max("offset").alias("max_offset"),
-            F.max("_turn").alias("max_turn"),
-        ]
-        if anomaly_expr is not None:
-            pre = pre.withColumn("_anom", anomaly_expr)
-            aggs.append(F.sum("_anom").alias("anomalies"))
-        lineage_cells = pre.groupBy("partition", "_b").agg(*aggs).collect()
+    Lineage, the CoW/MoR plan and the max turn_idx come from the exact
+    pre-grid, built once. A batch whose strided sample is clean decodes with
+    the table's KNOWN schema, and the exact anomaly count rides its write as
+    an observation — a clean batch never pays Arrow inference. The first
+    write, a sampled anomaly, a delta-first anomaly abort, or a known-schema
+    gate that aborts take exact Arrow inference instead, reconciled with
+    the table schema and widened for the envelope's turn_idx; the grid is
+    REUSED, so the batch is never scanned twice for metadata."""
+    grid = _pre_grid(spark, table, batch, public)
+    if grid["n_events"] == 0:
+        return {"batch_id": batch_id, "skipped": False, "events": 0, "elapsed_sec": 0.0}
+    # after a delta-first anomaly abort the batch is known to misfit: a
+    # second optimistic write would only repeat it, and the strided sample
+    # may miss the drifted rows
+    if (public is not None and grid["anomalies_sampled"] == 0
+            and "delta_first:anomaly" not in aborts):
+        decoded, upsert_cols, gate = _decode_known(batch, public, table)
+        obs = Observation()
+        decoded = decoded.observe(obs, *gate)
+        try:
+            return _write_planned(spark, table, batch_id, grid, public,
+                                  decoded.select(*upsert_cols), (obs, decoded, gate),
+                                  "planned_known", aborts, t0, writer_id, base)
+        except _Abort as e:
+            aborts.append(f"planned_known:{e}")
+            log.debug("[merge %s] known-schema gate aborted (%s) %.1fs — inferring",
+                      batch_id, e, time.perf_counter() - t0)
+    public, upserts = _decode_inferred(batch, public, grid["max_turn"], table.n_buckets)
+    return _write_planned(spark, table, batch_id, grid, public, upserts, None,
+                          "planned_inferred", aborts, t0, writer_id, base)
 
-        per_part: dict[int, dict[str, int]] = {}
-        batch_rows_by_bucket = {}
-        n_anomalies = 0
-        for r in lineage_cells:
-            p = per_part.setdefault(r["partition"], {"events": 0, "max_offset": -1})
-            p["events"] += r["events"]
-            p["max_offset"] = max(p["max_offset"], r["max_offset"])
-            batch_rows_by_bucket[r["_b"]] = (
-                batch_rows_by_bucket.get(r["_b"], 0) + r["events"]
-            )
-            if anomaly_expr is not None:
-                n_anomalies += int(r["anomalies"] or 0)
-        lineage_rows = [
-            {"partition": k, "events": v["events"], "max_offset": v["max_offset"]}
-            for k, v in per_part.items()
-        ]
-        n_events = sum(r["events"] for r in lineage_rows)
-        if n_events == 0:
-            return {"batch_id": batch_id, "skipped": False, "events": 0,
-                    "elapsed_sec": 0.0}
-        affected = sorted(batch_rows_by_bucket)
-        max_turn = max((int(r["max_turn"]) for r in lineage_cells
-                        if r["max_turn"] is not None), default=0)
-        if table_public_pre is not None and n_anomalies == 0:
-            payload_schema = T.StructType(
-                [T.StructField(f.name, f.dataType, True)
-                 for f in table_public_pre.fields]
-            )
-        else:
-            payload_schema = infer_payload_schema(batch)
-    log.debug("[merge %s] lineage+infer %.1fs%s", batch_id, time.perf_counter() - t0,
-              " (grid reused)" if grid is not None else "")
 
-    table_public = _public_schema(table)
-    public = reconcile_public_schema(table_public, payload_schema)
+def _decode_inferred(batch: DataFrame, public: T.StructType | None, max_turn: int,
+                     n_buckets: int) -> tuple[T.StructType, DataFrame]:
+    """Exact decode: Arrow-infer the batch's payload schema, reconcile it
+    with the table's (``public`` is None on the first write) and decode
+    with the result. Returns ``(reconciled public schema, upserts)``."""
+    payload_schema = infer_payload_schema(batch)
+    public = reconcile_public_schema(public, payload_schema)
     # envelope-driven widening: the feed envelope's turn_idx is authoritative
     # for the key; a payload-less delete can carry a value beyond the
     # reconciled type's range (invisible to payload inference) — widen from
@@ -825,7 +683,6 @@ def _merge_twopass(
                 for f in public.fields
             ]
         )
-    full = _full_schema(public)
 
     # vectorized decode: JVM-side from_json with the reconciled schema;
     # envelope is authoritative for the key (delete rows carry no payload)
@@ -847,94 +704,87 @@ def _merge_twopass(
             ]
         )
         decoded = decoded.withColumn("_p", F.from_json("payload", decode_schema))
-    value_cols = []
-    turn_t = next(f.dataType for f in public.fields if f.name == "turn_idx")
-    for f in public.fields:
-        if f.name == "conv_id":
-            value_cols.append(F.col("conv_id").cast("string").alias("conv_id"))
-        elif f.name == "turn_idx":
-            value_cols.append(F.col("turn_idx").cast(turn_t).alias("turn_idx"))
-        elif payload_schema is not None and f.name in payload_schema.fieldNames():
-            col = F.col(f"_p.{f.name}").cast(f.dataType)
-            if f.name == "text":
-                col = normalize_text_udf(col)  # pandas/Arrow UDF, never per-row
-            value_cols.append(col.alias(f.name))
-        else:
-            value_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    upserts = decoded.select(
-        *value_cols,
-        F.pmod(F.xxhash64("conv_id"), F.lit(table.n_buckets)).cast("int").alias("_bucket"),
-        F.col("ts").alias("_ts"),
-        F.col("event_seq").alias("_event_seq"),
-        (F.col("op") == "D").alias("_deleted"),
-    )
+    return public, decoded.select(*_upsert_cols(public, payload_schema, n_buckets, "cast"))
 
-    # Per-bucket write strategy (merge-on-read vs compact-inline), decided
-    # from the grid/pre-pass counts + the manifest, zero extra I/O. A bucket
-    # whose pending rows rival its base is COMPACTED INLINE (copy-on-write,
-    # one shuffle); a bucket where the batch is a sliver gets a DELTA APPEND
-    # folded at read/compaction — per-batch write cost tracks the BATCH.
-    cow, mor = table.plan_compaction(batch_rows_by_bucket)
 
-    lineage = {
-        str(r["partition"]): {"events": r["events"], "max_offset": r["max_offset"]}
-        for r in lineage_rows
-    }
-    n_parts = max((r["partition"] for r in lineage_rows), default=-1) + 1
-
-    # skew-immune write: AQE REBALANCE on _bucket — a hot bucket is SPLIT
-    # across tasks (optimizeSkewsInRebalancePartitions) and a tiny batch
-    # coalesces, so write width tracks data volume at any batch size.
-    log.debug("[merge %s] plan-built cow=%d mor=%d %.1fs", batch_id, len(cow), len(mor),
-              time.perf_counter() - t0)
+def _write_planned(
+    spark: SparkSession,
+    table: SnapshotLakeTable,
+    batch_id: int,
+    grid: dict[str, Any],
+    public: T.StructType,
+    upserts: DataFrame,
+    gate: tuple | None,
+    path: str,
+    aborts: list[str],
+    t0: float,
+    writer_id: str | None,
+    base: dict | None,
+) -> dict[str, Any]:
+    """The planned merge's one write block: per-bucket CoW/MoR writes, the
+    observed ``gate`` (``(observation, decoded, metrics)``, known-schema
+    decode only), and one commit. Any exception — a failed write, the gate's
+    ``_Abort``, a lost CAS race — aborts EVERY file set this attempt wrote."""
+    full = _full_schema(public)
     cols = [f.name for f in full.fields]
+    # Per-bucket write strategy (merge-on-read vs compact-inline), decided
+    # from the grid counts + the manifest, zero extra I/O. A bucket whose
+    # pending rows rival its base is COMPACTED INLINE (copy-on-write, one
+    # shuffle); a bucket where the batch is a sliver gets a DELTA APPEND
+    # folded at read/compaction — per-batch write cost tracks the BATCH.
+    cow, mor = table.plan_compaction(grid["by_bucket"])
     cow_files: dict = {}
     mor_files: dict = {}
     stats: dict = {}
     out_rels: list[str] = []
-    if cow:
-        existing = table.read_raw(
-            spark, cow, version=None if base is None else base["version"]
-        )
-        part = align_to(upserts.filter(F.col("_bucket").isin(cow)), full)
-        merged_in = part if existing is None else align_to(existing, full).unionByName(part)
-        rel, cow_files, s = table.write_files(
-            _lww(merged_in, cols).hint("rebalance", "_bucket"), cow
-        )
-        out_rels.append(rel)
-        stats.update(s)
-    if mor:
-        part = align_to(upserts.filter(F.col("_bucket").isin(mor)), full)
-        rel, mor_files, s = table.write_files(
-            _lww(part, cols).hint("rebalance", "_bucket"), mor
-        )
-        out_rels.append(rel)
-        stats.update(s)
+    t_plan = time.perf_counter()
     try:
+        if cow:
+            existing = table.read_raw(
+                spark, cow, version=None if base is None else base["version"]
+            )
+            part = align_to(upserts.filter(F.col("_bucket").isin(cow)), full)
+            merged_in = part if existing is None else align_to(existing, full).unionByName(part)
+            rel, cow_files, s = table.write_files(
+                _lww(merged_in, cols).hint("rebalance", "_bucket"), cow
+            )
+            out_rels.append(rel)
+            stats.update(s)
+        if mor:
+            part = align_to(upserts.filter(F.col("_bucket").isin(mor)), full)
+            rel, mor_files, s = table.write_files(
+                _lww(part, cols).hint("rebalance", "_bucket"), mor
+            )
+            out_rels.append(rel)
+            stats.update(s)
+        t_write = time.perf_counter()
+        if gate is not None and int(_await_observation(*gate)["anomalies"] or 0) > 0:
+            raise _Abort("anomaly")
         table.commit_merge(
-            cow,
-            cow_files,
-            mor_files,
-            stats,
-            full.jsonValue(),
-            _fold_summary(table, batch_id, lineage, n_events, n_parts,
-                          writer_id=writer_id, base=base),
+            cow, cow_files, mor_files, stats, full.jsonValue(),
+            _fold_summary(table, batch_id, grid["lineage"], grid["n_events"],
+                          grid["n_parts"], writer_id=writer_id, base=base),
             base_snapshot=base,
         )
     except Exception:
-        for rel in out_rels:  # lost CAS race: leave no orphan files
+        for rel in out_rels:
             table.abort_files(rel)
         raise
+    n_events = grid["n_events"]
     elapsed = time.perf_counter() - t0
-    log.debug("[merge %s] write+commit done %.1fs (%d ev)", batch_id, elapsed, n_events)
+    log.debug("[merge %s] %s done plan=%.2fs write=%.2fs obs+commit=%.2fs total=%.1fs "
+              "(cow=%d mor=%d, %d ev)", batch_id, path, t_plan - t0, t_write - t_plan,
+              time.perf_counter() - t_write, elapsed, len(cow), len(mor), n_events)
     return {
         "batch_id": batch_id,
         "skipped": False,
         "events": n_events,
-        "affected_buckets": len(affected),
+        "affected_buckets": len(cow) + len(mor),
         "compacted_buckets": len(cow),
         "delta_buckets": len(mor),
-        "lineage": lineage,
+        "path": path,
+        "aborts": aborts,
+        "lineage": grid["lineage"],
         "elapsed_sec": elapsed,
         "events_per_sec": n_events / elapsed if elapsed > 0 else 0.0,
     }

@@ -90,11 +90,10 @@ spark = get_spark(app_name=f"cdc_scaling_{cores}", master=f"local[{cores}]",
                       "spark.sql.files.maxPartitionBytes": f"{max_part_mb}m",
                   })
 # evolve_at=0.1: the schema-evolution wave lands inside batch 0 of the
-# replay, so the remaining batches exercise the STEADY-STATE fused merge —
-# the regime the sustained-throughput metric describes (a days-long CDC
-# tail evolves rarely; the default 0.5 put the wave in the LAST batch,
-# making every measured batch an evolution batch and the fused path dead
-# code in the bench).
+# replay, so the remaining batches exercise the STEADY-STATE delta-first
+# merge — the regime the sustained-throughput metric describes (a days-long
+# CDC tail evolves rarely; the default 0.5 put the wave in the LAST batch,
+# making every measured batch an evolution batch that pays Arrow inference).
 # STEADY regime (north-rule design point): table >> batch, so every batch
 # takes the merge-on-read delta path and per-batch work is O(batch) — the
 # regime of a CDC tail on a 10^10-row table, where compaction is a
@@ -433,9 +432,9 @@ every trial and its steal reading is listed — nothing discarded silently):
 
 Method: `python -m palimpzest_spark.cdc.scaling --events {args.events} --n {args.n}`.
 Each replay: batch replay of the full change feed through the merge-apply
-pipeline (fused count+strided-probe pre-job → vectorized decode/normalize
-→ fused LWW merge → AQE-rebalanced bucketed rewrite, zstd data+shuffle →
-snapshot commit) into a fresh table; bootstrap excluded. N={args.n}→4N={args.n * 4}
+pipeline (steady batches: the delta-first merge — one observed job of
+vectorized decode/normalize → LWW fold → AQE-rebalanced merge-on-read
+delta write, zstd data+shuffle, no pre-job → snapshot commit) into a fresh table; bootstrap excluded. N={args.n}→4N={args.n * 4}
 of this box's 32 cores so the measurement reflects the job's parallel
 structure, not the single shared socket's memory-bandwidth/turbo wall (a
 real 4N-executor fleet multiplies sockets, memory channels, and disks;

@@ -63,10 +63,11 @@ def test_batch_replay_matches_fold(spark, fixture_dirs, tmp_path):
     bootstrap(spark, table, fixture_dirs["base"])
     metrics = replay_batches(spark, table, fixture_dirs["feed_dir"], files_per_batch=3)
     assert sum(m["events"] for m in metrics) > 0
-    # non-vacuous: the steady-state single-job fused path must actually engage
-    # (batch 1 is two-pass by design; evolution batches fall back by design —
-    # but at least one stable-schema batch after batch 1 must fuse)
-    assert any(m.get("fused") for m in metrics), "fused merge path never engaged"
+    # non-vacuous: batches here rival the table, so every one is planned;
+    # evolution batches infer by design, but at least one stable-schema
+    # batch must take the known-schema decode behind the observed gate
+    assert any(m.get("path") == "planned_known" for m in metrics), [
+        (m.get("path"), m.get("aborts")) for m in metrics]
     _assert_state_equal(_actual(spark, table), _expected(fixture_dirs))
 
 
@@ -675,13 +676,20 @@ def test_read_ts_range_zone_map_pruning(spark, tmp_path):
     assert n_pruned < n_all, (n_pruned, n_all)
 
 
-def test_steady_cdc_call_job_budget(spark, tmp_path, monkeypatch):
-    """The CDC calls the benchmark times start a pinned number of Spark
-    jobs: a steady delta-first merge_batch with no compaction, a read_conv
-    point lookup and a read_ts_range scan. A new collect or count in any of
-    them fails here; lower a pin only when a cut lands."""
-    from palimpzest_spark.cdc import merge as merge_mod
+def _jobs(spark, fn):
+    """(Spark jobs started by ``fn()``, its result)."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(sched.nextJobId())
+    out = fn()
+    return int(sched.nextJobId()) - j0, out
 
+
+def test_steady_cdc_call_job_budget(spark, tmp_path):
+    """The CDC calls the benchmark times start a pinned number of Spark
+    jobs: the first merge_batch after bootstrap (planned, known schema), a
+    steady delta-first merge_batch with no compaction, a read_conv point
+    lookup and a read_ts_range scan. A new collect or count in any of them
+    fails here; lower a pin only when a cut lands."""
     d = str(tmp_path)
     base = feedgen.gen_base_table(f"{d}/base", n_convs=1500, max_turns=8, seed=5)
     feedgen.gen_change_feed(
@@ -691,37 +699,198 @@ def test_steady_cdc_call_job_budget(spark, tmp_path, monkeypatch):
     files = sorted(glob.glob(f"{d}/feed/feed-*.parquet"))
     table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
     bootstrap(spark, table, base)
-    replay_batches(spark, table, f"{d}/feed", files_per_batch=1, max_batches=3)
 
-    took_delta_first = []
-    real = merge_mod._merge_delta_first
+    def merge(i):
+        return merge_batch(
+            spark, table, spark.read.schema(FEED_SCHEMA).parquet(files[i]), batch_id=i)
 
-    def spy(*a, **k):
-        out = real(*a, **k)
-        took_delta_first.append(out is not None)
-        return out
+    n, m = _jobs(spark, lambda: merge(0))
+    assert m["path"] == "planned_known" and m["aborts"] == [], m
+    assert 1 <= n <= 5, f"first merge_batch after bootstrap started {n} Spark jobs"
+    merge(1)
+    merge(2)
 
-    monkeypatch.setattr(merge_mod, "_merge_delta_first", spy)
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-
-    def jobs(fn):
-        j0 = int(sched.nextJobId())
-        out = fn()
-        return int(sched.nextJobId()) - j0, out
-
-    n, m = jobs(lambda: merge_batch(
-        spark, table, spark.read.schema(FEED_SCHEMA).parquet(files[3]), batch_id=3))
-    assert took_delta_first == [True] and m["compacted_buckets"] == 0, m
+    n, m = _jobs(spark, lambda: merge(3))
+    assert m["path"] == "delta_first" and m["compacted_buckets"] == 0, m
     assert 1 <= n <= 3, f"steady merge_batch started {n} Spark jobs"
 
     conv = sorted(pd.read_parquet(base)["conv_id"])[7]
-    n, rows = jobs(lambda: table.read_conv(spark, [conv]).collect())
+    n, rows = _jobs(spark, lambda: table.read_conv(spark, [conv]).collect())
     assert rows and 1 <= n <= 2, f"read_conv started {n} Spark jobs"
 
     lo = feedgen.BASE_EPOCH * 10**6
-    n, _ = jobs(lambda: table.read_ts_range(spark, lo, lo + 3_600 * 10**6)
-                .write.format("noop").mode("overwrite").save())
+    n, _ = _jobs(spark, lambda: table.read_ts_range(spark, lo, lo + 3_600 * 10**6)
+                 .write.format("noop").mode("overwrite").save())
     assert 1 <= n <= 2, f"read_ts_range started {n} Spark jobs"
+
+
+def _upserts(spark, keys, seqs, extra=None, offsets=True):
+    """A hand-made feed batch: one upsert per (conv_id, turn_idx) in
+    ``keys`` with the matching ``event_seq``, partition 0. ``extra`` adds
+    payload keys (schema drift); ``offsets=False`` leaves every offset null."""
+    import json as _json
+
+    pdf = pd.DataFrame(
+        [
+            {
+                "op": "U", "conv_id": c, "turn_idx": t,
+                "payload": _json.dumps({"conv_id": c, "turn_idx": t, "role": "user",
+                                        "text": f"t{s}", "tool": None, **(extra or {})}),
+                "ts": pd.Timestamp((feedgen.BASE_EPOCH + 500_000 + s) * 10**9),
+                "event_seq": s, "partition": 0, "offset": s if offsets else None,
+            }
+            for (c, t), s in zip(keys, seqs)
+        ]
+    )[FEED_SCHEMA.fieldNames()]
+    pdf["offset"] = pdf["offset"].astype("Int64")
+    return pdf, spark.createDataFrame(pdf, schema=FEED_SCHEMA)
+
+
+def _sampled_seqs(spark, sampled: bool, n: int) -> list[int]:
+    """``n`` event_seq values the planned merge's strided anomaly sample
+    does (or does not) parse — the same hash as ``merge._pre_grid``."""
+    from pyspark.sql import functions as F
+
+    hit = F.pmod(F.xxhash64("id"), F.lit(64)) == 0
+    rows = spark.range(0, 64 * n + 4096).where(hit if sampled else ~hit).limit(n).collect()
+    return [r.id for r in rows]
+
+
+def _uncommitted_files(table: SnapshotLakeTable) -> set[str]:
+    import os
+
+    snap = table.snapshot()
+    live = {p for ps in [*snap["files"].values(), *snap["deltas"].values()] for p in ps}
+    on_disk = {
+        os.path.relpath(p, table.root)
+        for p in glob.glob(f"{table.root}/data/**/*.parquet", recursive=True)
+    }
+    return on_disk - live
+
+
+def _assert_tool_args_equal(actual: pd.DataFrame, expected: pd.DataFrame):
+    assert "tool_args" in actual.columns
+    a = actual["tool_args"].where(actual["tool_args"].notna(), None).tolist()
+    e = expected["tool_args"].where(expected["tool_args"].notna(), None).tolist()
+    assert a == e
+
+
+def test_drift_with_null_offsets_after_delta_first_abort_matches_fold(spark, tmp_path):
+    """A small drifted batch (new payload key) with null source offsets on a
+    steady table: delta-first aborts on the anomaly and the planned merge
+    goes straight to inference, with no second optimistic write. Lineage
+    records max_offset -1 for the partition, and the table equals the
+    fold."""
+    d = str(tmp_path)
+    base = feedgen.gen_base_table(f"{d}/base", n_convs=300, max_turns=4, seed=21)
+    table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
+    bootstrap(spark, table, base)
+    keys = sorted(zip(*[pd.read_parquet(base)[c] for c in ("conv_id", "turn_idx")]))
+    f1, b1 = _upserts(spark, keys[:20], range(20))
+    assert merge_batch(spark, table, b1, batch_id=1)["path"] == "planned_known"
+
+    f2, b2 = _upserts(spark, keys[100:110], range(100, 110),
+                      extra={"tool_args": "{\"q\": 1}"}, offsets=False)
+    n, m = _jobs(spark, lambda: merge_batch(spark, table, b2, batch_id=2))
+    assert (m["path"], m["aborts"]) == ("planned_inferred", ["delta_first:anomaly"]), m
+    assert m["lineage"] == {"0": {"events": 10, "max_offset": -1}}
+    assert 1 <= n <= 9, f"delta-first abort → inferred started {n} Spark jobs"
+    assert table.snapshot()["summary"]["offsets"]["0"] == 19
+
+    expected = fold(pd.read_parquet(base), pd.concat([f1, f2], ignore_index=True))
+    actual = _actual(spark, table)
+    _assert_state_equal(actual, expected)
+    _assert_tool_args_equal(actual, expected)
+
+
+def test_known_gate_abort_reruns_inferred(spark, tmp_path):
+    """Drifted rows the strided sample misses: the known-schema write's
+    exact observed gate aborts it (no files left behind) and the same grid
+    feeds the inferred write; the table equals the fold."""
+    d = str(tmp_path)
+    base = feedgen.gen_base_table(f"{d}/base", n_convs=60, max_turns=4, seed=22)
+    table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
+    bootstrap(spark, table, base)
+    keys = sorted(zip(*[pd.read_parquet(base)[c] for c in ("conv_id", "turn_idx")]))
+    f, b = _upserts(spark, keys[:40], _sampled_seqs(spark, False, 40),
+                    extra={"tool_args": "{\"q\": 2}"})
+    n, m = _jobs(spark, lambda: merge_batch(spark, table, b, batch_id=1))
+    assert (m["path"], m["aborts"]) == ("planned_inferred", ["planned_known:anomaly"]), m
+    assert 1 <= n <= 9, f"known → inferred started {n} Spark jobs"
+    assert _uncommitted_files(table) == set()
+
+    expected = fold(pd.read_parquet(base), f)
+    actual = _actual(spark, table)
+    _assert_state_equal(actual, expected)
+    _assert_tool_args_equal(actual, expected)
+
+
+def test_planned_write_failure_leaves_no_uncommitted_files(spark, tmp_path, monkeypatch):
+    """When the second write of a planned merge (its merge-on-read file set,
+    after the copy-on-write one) raises, every file set the attempt wrote is
+    aborted: nothing uncommitted stays under the table's data directory, and
+    a retry of the batch merges to the fold."""
+    from palimpzest_spark.cdc.lake import bucket_of
+
+    d = str(tmp_path)
+    base = feedgen.gen_base_table(f"{d}/base", n_convs=200, max_turns=4, seed=23)
+    table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
+    bootstrap(spark, table, base)
+    convs = sorted(pd.read_parquet(base)["conv_id"].unique())
+    # bucket 0 gets far more new turns than half its base rows (CoW); bucket
+    # 1 gets one (MoR). Drifted payloads the strided sample catches send the
+    # batch straight to the inferred decode.
+    hot = [c for c in convs if bucket_of(c, 4) == 0]
+    cold = next(c for c in convs if bucket_of(c, 4) == 1)
+    keys = [(c, 100 + t) for c in hot for t in range(3)] + [(cold, 100)]
+    f, b = _upserts(spark, keys, _sampled_seqs(spark, True, len(keys)),
+                    extra={"tool_args": "{\"q\": 3}"})
+    v0 = table.current_version()
+
+    calls = []
+    real = SnapshotLakeTable.write_files
+
+    def failing(self, df, buckets, **k):
+        calls.append(list(buckets))
+        if len(calls) == 2:
+            raise RuntimeError("injected write failure")
+        return real(self, df, buckets, **k)
+
+    monkeypatch.setattr(SnapshotLakeTable, "write_files", failing)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        merge_batch(spark, table, b, batch_id=1)
+    assert calls == [[0], [1]], calls
+    assert table.current_version() == v0
+    assert _uncommitted_files(table) == set()
+
+    monkeypatch.undo()
+    m = merge_batch(spark, table, b, batch_id=1)
+    assert (m["path"], m["compacted_buckets"], m["delta_buckets"]) == (
+        "planned_inferred", 1, 1), m
+    expected = fold(pd.read_parquet(base), f)
+    actual = _actual(spark, table)
+    _assert_state_equal(actual, expected)
+    _assert_tool_args_equal(actual, expected)
+
+
+def test_first_write_without_bootstrap_matches_fold(spark, tmp_path):
+    """Merging into a table that was never bootstrapped (``cdc.runner``
+    without ``--base``) plans from the grid with nothing to sample against,
+    infers the schema, and equals the fold over an empty base."""
+    d = str(tmp_path)
+    paths = feedgen.gen_change_feed(
+        f"{d}/feed", n_events=400, n_convs=30, max_turns=4, n_files=1, seed=24,
+    )
+    table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
+    n, m = _jobs(spark, lambda: merge_batch(
+        spark, table, spark.read.schema(FEED_SCHEMA).parquet(*paths), batch_id=0))
+    assert (m["path"], m["aborts"]) == ("planned_inferred", []), m
+    assert 1 <= n <= 6, f"first write started {n} Spark jobs"
+
+    expected = fold(pd.DataFrame(), pd.read_parquet(paths[0]))
+    actual = _actual(spark, table)
+    _assert_state_equal(actual, expected)
+    _assert_tool_args_equal(actual, expected)
 
 
 def test_replay_with_quarantine_gates(spark, tmp_path):

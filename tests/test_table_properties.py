@@ -183,14 +183,14 @@ def test_maintenance_rebase_keeps_competitor_advisory_summary(tmp_path):
     t.commit(
         {"files": {}, "deltas": {}, "filestats": {}, "schema": None,
          "summary": {"last_batch_id": 0, "offsets": {"0": 5},
-                     "batch_events": 7, "fused_clean": False}}
+                     "batch_events": 7}}
     )
     planned = t.snapshot()  # maintenance validates here (v1)
     # a concurrent merge lands v2 with newer advisory fields
     t.commit(
         {"files": {}, "deltas": {}, "filestats": {}, "schema": None,
          "summary": {"last_batch_id": 1, "offsets": {"0": 9, "1": 3},
-                     "batch_events": 42, "fused_clean": True}}
+                     "batch_events": 42}}
     )
     # the maintenance commit rebases (expected v2 is taken) and lands v3
     v = t.commit_merge(
@@ -198,7 +198,7 @@ def test_maintenance_rebase_keeps_competitor_advisory_summary(tmp_path):
         base_snapshot=planned, maintenance=True,
     )
     s = t.snapshot(v)["summary"]
-    assert s["batch_events"] == 42 and s["fused_clean"] is True
+    assert s["batch_events"] == 42
     assert s["last_batch_id"] == 1
     assert s["offsets"] == {"0": 9, "1": 3}
 
