@@ -126,7 +126,7 @@ def merge_batch_iceberg(
     batch_id: int,
 ) -> None:
     """foreachBatch body for the Iceberg path. ``deduped_upserts`` must be
-    in-batch LWW-deduped (``merge.py``'s ``_lww`` — MERGE requires ≤1 source
+    in-batch LWW-deduped (``lake.lww_fold`` — MERGE requires ≤1 source
     row per key). Batch idempotence: Iceberg snapshot summary property
     ``cdc.last-batch-id`` checked before merging (same gate as lake.py)."""
     if not iceberg_available(spark):

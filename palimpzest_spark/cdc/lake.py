@@ -217,22 +217,27 @@ def bucket_of(conv_id: str, n_buckets: int) -> int:
     return xxhash64(conv_id.encode("utf-8")) % n_buckets
 
 
-def lww_fold(df: DataFrame, key_cols: tuple[str, ...] = KEY_COLS) -> DataFrame:
-    """Last-writer-wins reduce per key via ``max_by`` over the version struct
-    ``(_ts, _event_seq)``. Deliberately an *aggregate*, not a window
-    ``row_number``: Catalyst's hash aggregate does map-side partial combine,
-    so hot keys collapse before the shuffle (the skew-immune LWW). Shared by
-    the merge, the read-side delta fold, and compaction — associativity of
-    max_by is what makes merge-on-read equal to eager copy-on-write."""
-    others = [c for c in df.columns if c not in key_cols]
+def lww_fold(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Last-writer-wins reduce per ``KEY_COLS`` key via ``max_by`` over the
+    version struct ``(_ts, _event_seq)``. Deliberately an *aggregate*, not a
+    window ``row_number``: Catalyst's hash aggregate does map-side partial
+    combine, so hot keys collapse before the shuffle (the skew-immune LWW).
+    The one fold of the engine: the merge's in-batch dedup and CoW rewrite,
+    the live read (``SnapshotLakeTable._live``), compaction, rebucketing and
+    ``timetravel`` all call it — associativity of max_by is what makes
+    merge-on-read equal to eager copy-on-write. ``cols`` names every column
+    of ``df`` in order; callers take it from a driver-side schema, so
+    building the fold costs no schema round trip. Output: the key columns,
+    then the others in ``cols`` order."""
     return (
-        df.groupBy(*key_cols)
+        df.groupBy(*KEY_COLS)
         .agg(
             F.max_by(
-                F.struct(*others), F.struct(F.col("_ts"), F.col("_event_seq"))
+                F.struct(*[c for c in cols if c not in KEY_COLS]),
+                F.struct(F.col("_ts"), F.col("_event_seq")),
             ).alias("_r")
         )
-        .select(*key_cols, "_r.*")
+        .select(*KEY_COLS, "_r.*")
     )
 
 
@@ -412,16 +417,6 @@ class SnapshotLakeTable:
         so = snap.get("sort_order")
         if so in ("ts", "key"):
             self.sort_order = so
-
-    def _peek_n_buckets(self) -> int | None:
-        """Persisted bucket count of the current snapshot, read directly from
-        the manifest file (no snapshot cache — callable from __init__).
-        Tables written before n_buckets was persisted return None."""
-        nb = self._peek_meta_keys("n_buckets").get("n_buckets")
-        try:
-            return int(nb) if nb else None
-        except ValueError:
-            return None
 
     def _peek_meta_keys(self, *keys: str) -> dict:
         """Table-property keys read directly off the current raw manifest in
@@ -767,19 +762,52 @@ class SnapshotLakeTable:
         return int(summary.get("last_batch_id", -1))
 
     # -- reads ---------------------------------------------------------------
+    # Each public read (``read``, ``read_conv``, ``read_ts_range``) only
+    # chooses files from the manifest and hands them to ``_live``, the one
+    # live-read rule. ``read_raw`` is the unfolded scan that the merge,
+    # compaction and the change feed fold themselves.
 
     def schema(self, version: int | None = None) -> T.StructType | None:
         s = self.snapshot(version).get("schema")
         return T.StructType.fromJson(s) if s else None
 
-    def _empty_public(self, spark: SparkSession, version: int | None) -> DataFrame:
-        """Empty result frame in the PUBLIC projection (meta columns
-        dropped) — the schema every non-empty read path returns. The
-        empty/fully-pruned branches must match it exactly or an absent-key
-        lookup breaks unionByName/fixed-schema sinks downstream."""
-        schema = self.schema(version) or T.StructType([])
-        pub = T.StructType([f for f in schema.fields if f.name not in META_COLS])
-        return spark.createDataFrame([], pub)
+    def _paths(self, snap: dict, buckets: list[int] | None = None) -> list[str]:
+        """Relative base + delta file paths of ``buckets`` (default: every
+        bucket) in ``snap``. A time-travel read uses the bucket universe of
+        THAT snapshot — after rebucket() the current count no longer
+        describes old manifests."""
+        sel = range(int(snap.get("n_buckets") or self.n_buckets)) if buckets is None else buckets
+        return [
+            p for b in sel
+            for p in snap["files"].get(str(b), []) + snap["deltas"].get(str(b), [])
+        ]
+
+    def _live(
+        self, spark: SparkSession, snap: dict, paths: list[str], key_filter=None
+    ) -> DataFrame:
+        """Live rows of ``paths`` (relative, chosen from ``snap``): read with
+        the snapshot's own schema, ``key_filter`` applied BEFORE the fold,
+        the LWW fold only if one of ``paths`` is a delta file, tombstones
+        dropped AFTER the fold, public columns in schema order. With no
+        paths: the typed empty public frame, so an absent-key lookup still
+        fits unionByName/fixed-schema sinks downstream.
+
+        ``key_filter`` must be a predicate on the fold key: the fold is per
+        key, so dropping other keys' rows up front is exact, and as a scan
+        predicate it reaches the parquet reader (row-group min/max skipping
+        inside kept files). The tombstone filter must stay post-fold: a
+        delete may be the newest version, and filtering it first would
+        resurrect the older row."""
+        full = T.StructType.fromJson(snap["schema"]) if snap.get("schema") else T.StructType([])
+        public = [f for f in full.fields if f.name not in META_COLS]
+        if not paths:
+            return spark.createDataFrame([], T.StructType(public))
+        df = spark.read.schema(full).parquet(*[os.path.join(self.root, p) for p in paths])
+        if key_filter is not None:
+            df = df.filter(key_filter)
+        if not {p for ps in snap["deltas"].values() for p in ps}.isdisjoint(paths):
+            df = lww_fold(df, full.fieldNames())
+        return df.filter(~F.col("_deleted")).select(*[f.name for f in public])
 
     def read_raw(
         self,
@@ -788,27 +816,18 @@ class SnapshotLakeTable:
         version: int | None = None,
     ) -> DataFrame | None:
         """Scan base + delta files of the given buckets (file pruning), WITHOUT
-        the LWW fold — a key may appear once per delta file. Callers fold.
-        ``version`` time-travels to an older snapshot (Iceberg snapshot-id
-        read); snapshots are immutable manifests, so an old read is just the
-        old file list — provided the files haven't been vacuumed
-        (``timetravel.expire_snapshots``)."""
+        the LWW fold — a key may appear once per delta file, and tombstones
+        and meta columns are kept. Callers fold. ``version`` time-travels to
+        an older snapshot (Iceberg snapshot-id read); snapshots are immutable
+        manifests, so an old read is just the old file list — provided the
+        files haven't been vacuumed (``timetravel.expire_snapshots``)."""
         snap = self.snapshot(version)
-        # a time-travel read must use the bucket universe of THAT snapshot —
-        # after rebucket() the current count no longer describes old manifests
-        nb = int(snap.get("n_buckets") or self.n_buckets)
-        sel = range(nb) if buckets is None else buckets
-        paths = [
-            os.path.join(self.root, p)
-            for b in sel
-            for p in snap["files"].get(str(b), []) + snap["deltas"].get(str(b), [])
-        ]
+        paths = self._paths(snap, buckets)
         if not paths:
             return None
-        return spark.read.schema(self.schema(version)).parquet(*paths)
-
-    # merge.py's historical name for the pre-merge scan of affected buckets
-    read_buckets = read_raw
+        return spark.read.schema(T.StructType.fromJson(snap["schema"])).parquet(
+            *[os.path.join(self.root, p) for p in paths]
+        )
 
     def has_deltas(self, version: int | None = None) -> bool:
         return any(ps for ps in self.snapshot(version)["deltas"].values())
@@ -816,24 +835,15 @@ class SnapshotLakeTable:
     def read(
         self,
         spark: SparkSession,
-        include_meta: bool = False,
         version: int | None = None,
+        buckets: list[int] | None = None,
     ) -> DataFrame:
-        """Table state as of ``version`` (default: current). Public view:
-        tombstones filtered, meta hidden. Base files are key-unique by
-        construction; the LWW fold runs only when un-compacted delta files
-        exist (merge-on-read)."""
-        df = self.read_raw(spark, version=version)
-        if df is None:
-            if include_meta:
-                return spark.createDataFrame([], self.schema(version) or T.StructType([]))
-            return self._empty_public(spark, version)
-        if self.has_deltas(version):
-            df = lww_fold(df)
-        if include_meta:
-            return df
-        public = [c for c in df.columns if c not in META_COLS]
-        return df.filter(~F.col("_deleted")).select(*public)
+        """Table state as of ``version`` (default: current), restricted to
+        ``buckets`` (default: all). Public view: tombstones filtered, meta
+        hidden; the LWW fold runs only when a delta file is scanned
+        (merge-on-read)."""
+        snap = self.snapshot(version)
+        return self._live(spark, snap, self._paths(snap, buckets))
 
     def read_conv(
         self,
@@ -848,36 +858,16 @@ class SnapshotLakeTable:
         from ``bucket_of`` — the driver-side twin of the merge path's
         ``pmod(xxhash64(conv_id), n_buckets)`` partitioning expression —
         so planning the lookup launches NO Spark job (hashing the literal
-        ids through a collect cost ~1s/lookup, ~10x the pruned scan)."""
-        if not conv_ids:
-            return self._empty_public(spark, version)
+        ids through a collect cost ~1s/lookup, ~10x the pruned scan).
+        Within those buckets ``_conv_prune`` skips files by zone map; the
+        fold runs only if a kept file is a delta, so a lookup over
+        compacted (or delta-pruned) buckets skips the groupBy shuffle even
+        while other buckets still carry deltas."""
         snap = self.snapshot(version)
         nb = int(snap.get("n_buckets") or self.n_buckets)
         buckets = sorted({bucket_of(c, nb) for c in conv_ids})
         paths, _skipped = self._conv_prune(snap, buckets, conv_ids)
-        if not paths:
-            return self._empty_public(spark, version)
-        df = spark.read.schema(self.schema(version)).parquet(
-            *[os.path.join(self.root, p) for p in paths]
-        )
-        # key filter BEFORE the fold: the LWW fold is per-key, so dropping
-        # other keys' rows up front is exact — and as a scan-level predicate
-        # it reaches the parquet reader (row-group min/max skipping inside
-        # kept files; with sort_order="key" clustering most groups prune).
-        # The tombstone filter must stay POST-fold: a delete may be the
-        # newest version and pre-filtering it would resurrect the old row.
-        df = df.filter(F.col("conv_id").isin(conv_ids))
-        # fold only if the SCAN kept a delta file — base files are key-unique
-        # by construction, so a lookup over compacted (or delta-pruned)
-        # buckets skips the groupBy shuffle entirely, even while other
-        # buckets of the table still carry deltas
-        delta_rels = {
-            p for b in buckets for p in snap["deltas"].get(str(b), [])
-        }
-        if any(p in delta_rels for p in paths):
-            df = lww_fold(df)
-        public = [c for c in df.columns if c not in META_COLS]
-        return df.filter(~F.col("_deleted")).select(*public)
+        return self._live(spark, snap, paths, F.col("conv_id").isin(conv_ids))
 
     def _conv_prune(
         self, snap: dict, buckets: list[int], conv_ids: list[str]
@@ -931,7 +921,8 @@ class SnapshotLakeTable:
         merge-on-read, dropping a file that holds a key's NEWEST version
         (outside the range) while keeping an older in-range version would
         resurrect the old row — so delta-carrying buckets are read whole and
-        folded. Compaction therefore also restores full skipping power.
+        folded, and the range filter runs after the fold. Compaction
+        therefore also restores full skipping power.
         ``ts_from``/``ts_to`` are datetimes or epoch-micro ints."""
         import datetime
 
@@ -947,13 +938,11 @@ class SnapshotLakeTable:
         snap = self.snapshot(version)
         fstats = snap.get("filestats", {})
         paths = []
-        scanned_deltas = False
         for b in range(int(snap.get("n_buckets") or self.n_buckets)):
             deltas = snap["deltas"].get(str(b), [])
             base = snap["files"].get(str(b), [])
             if deltas:
                 paths += base + deltas  # no pruning: fold needs every version
-                scanned_deltas = True
                 continue
             for rel in base:
                 st = fstats.get(rel, {})
@@ -961,26 +950,13 @@ class SnapshotLakeTable:
                 if zmin is not None and (zmax < lo or zmin > hi):
                     continue  # file skipped by zone map
                 paths.append(rel)
-        schema = self.schema(version)
-        if not paths or schema is None:
-            return self._empty_public(spark, version)
-        df = spark.read.schema(schema).parquet(
-            *[os.path.join(self.root, p) for p in paths]
-        )
-        # fold only if a delta file is actually in the scan: base files are
-        # key-unique, so a range read over compacted buckets skips the
-        # groupBy shuffle even while OTHER buckets still carry deltas
-        if scanned_deltas:
-            df = lww_fold(df)
-        public = [c for c in df.columns if c not in META_COLS]
+        live = self._live(spark, snap, paths)
+        if not paths:
+            return live  # typed empty frame; a schema-less table has no ts
         ts_col = F.col("ts")
-        return (
-            df.filter(~F.col("_deleted"))
-            .filter(
-                (ts_col >= F.timestamp_micros(F.lit(lo)))
-                & (ts_col <= F.timestamp_micros(F.lit(hi)))
-            )
-            .select(*public)
+        return live.filter(
+            (ts_col >= F.timestamp_micros(F.lit(lo)))
+            & (ts_col <= F.timestamp_micros(F.lit(hi)))
         )
 
     # -- writes ---------------------------------------------------------------
@@ -1055,43 +1031,6 @@ class SnapshotLakeTable:
         import shutil
 
         shutil.rmtree(os.path.join(self.root, out_rel), ignore_errors=True)
-
-    def commit_files(
-        self,
-        buckets: list[int],
-        new_files: dict,
-        schema_json: dict,
-        summary: dict,
-        filestats: dict | None = None,
-    ) -> int:
-        """Replace the given buckets' BASE files (their deltas, now folded in,
-        are dropped); all other buckets carry forward unchanged."""
-        prev = self.snapshot()
-        replaced = set(buckets)
-        files = {b: ps for b, ps in prev["files"].items() if int(b) not in replaced}
-        deltas = {b: ps for b, ps in prev["deltas"].items() if int(b) not in replaced}
-        files.update(new_files)
-        kept = {p for ps in files.values() for p in ps} | {
-            p for ps in deltas.values() for p in ps
-        }
-        fs = {p: s for p, s in prev["filestats"].items() if p in kept}
-        fs.update(filestats or {})
-        return self.commit(
-            {"files": files, "deltas": deltas, "filestats": fs,
-             "schema": schema_json, "summary": summary},
-            expect_version=prev["version"],
-        )
-
-    def write_buckets(
-        self,
-        df: DataFrame,
-        buckets: list[int],
-        schema_json: dict,
-        summary: dict,
-    ) -> int:
-        """Write + commit in one step (bootstrap / non-optimistic callers)."""
-        _out_rel, new_files, stats = self.write_files(df, buckets)
-        return self.commit_files(buckets, new_files, schema_json, summary, stats)
 
     # -- merge-on-read ----------------------------------------------------------
 
@@ -1253,13 +1192,13 @@ class SnapshotLakeTable:
     def _compact_claimed(
         self, spark: SparkSession, snap: dict, todo: list[int]
     ) -> int:
-        raw = self.read_raw(spark, todo)
+        raw = self.read_raw(spark, todo, version=snap["version"])
         # sorted, size-split output (Iceberg sort-order discipline): each
         # bucket's base lands as one-or-more files with NARROW footer zone
         # maps on the sort column — whole-file skipping for the matching
         # read path (_sort_cols) instead of re-reading all history
         folded = (
-            lww_fold(raw)
+            lww_fold(raw, T.StructType.fromJson(snap["schema"]).fieldNames())
             .hint("rebalance", "_bucket")
             .sortWithinPartitions(*self._sort_cols())
         )
@@ -1356,7 +1295,7 @@ class SnapshotLakeTable:
         old_n = self.n_buckets
         if new_n_buckets == old_n:
             return self.current_version()
-        raw = self.read_raw(spark)
+        raw = self.read_raw(spark, version=snap["version"])
         self.n_buckets = new_n_buckets
         try:
             new_buckets = list(range(new_n_buckets))
@@ -1365,7 +1304,7 @@ class SnapshotLakeTable:
                 stats: dict = {}
             else:
                 folded = (
-                    lww_fold(raw)
+                    lww_fold(raw, T.StructType.fromJson(snap["schema"]).fieldNames())
                     .withColumn(
                         "_bucket",
                         F.pmod(F.xxhash64("conv_id"), F.lit(new_n_buckets)).cast("int"),

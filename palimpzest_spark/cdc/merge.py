@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from palimpzest_spark.cdc.lake import META_COLS, SnapshotLakeTable
+from palimpzest_spark.cdc.lake import META_COLS, SnapshotLakeTable, lww_fold
 from palimpzest_spark.cdc.reconcile import (
     align_to,
     complex_misfit_expr,
@@ -61,8 +61,6 @@ from palimpzest_spark.cdc.reconcile import (
     reconcile_public_schema,
 )
 from palimpzest_spark.cdc.transform import normalize_text_udf
-
-KEY_COLS = ("conv_id", "turn_idx")
 
 log = logging.getLogger(__name__)
 
@@ -86,20 +84,6 @@ def _full_schema(public: T.StructType) -> T.StructType:
     )
 
 
-def _lww(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Last-writer-wins reduce per key via max_by (map-side combinable)."""
-    return (
-        df.groupBy(*KEY_COLS)
-        .agg(
-            F.max_by(
-                F.struct(*[c for c in cols if c not in KEY_COLS]),
-                F.struct(F.col("_ts"), F.col("_event_seq")),
-            ).alias("_r")
-        )
-        .select(*KEY_COLS, "_r.*")
-    )
-
-
 def bootstrap(
     spark: SparkSession,
     table: SnapshotLakeTable,
@@ -117,12 +101,12 @@ def bootstrap(
         .withColumn("_deleted", F.lit(False))
     )
     n = df.count()
-    table.write_buckets(
-        align_to(df, full).repartition(table.n_buckets, "_bucket"),
-        list(range(table.n_buckets)),
-        full.jsonValue(),
-        {"last_batch_id": -1, "offsets": {}, "rows_bootstrapped": n},
+    buckets = list(range(table.n_buckets))
+    _out_rel, files, stats = table.write_files(
+        align_to(df, full).repartition(table.n_buckets, "_bucket"), buckets
     )
+    table.commit_merge(buckets, files, {}, stats, full.jsonValue(),
+                       {"last_batch_id": -1, "offsets": {}, "rows_bootstrapped": n})
     return {"rows": n}
 
 
@@ -146,9 +130,8 @@ def _anomaly_expr(table_public: T.StructType):
         # (a producer emitting real nested JSON evolves the schema to
         # array/struct) cannot be cast from string AT ALL — that's an
         # analysis-time error, not a NULL — so they re-parse the field's
-        # raw JSON text via reconcile.complex_misfit_expr (shared with
-        # schema_fits_probe so the two gates cannot drift; includes the r6
-        # struct-drift array-wrap fix). Pinned by
+        # raw JSON text via reconcile.complex_misfit_expr (exact for struct
+        # drift via the array-wrap check). Every payload case is pinned by
         # test_probe_agrees_with_anomaly_expr.
         if isinstance(dt, (T.ArrayType, T.StructType, T.MapType)):
             bads.append(complex_misfit_expr(v, dt))
@@ -332,7 +315,6 @@ def _merge_once(
 
 
 def _pre_grid(
-    spark: SparkSession,
     table: SnapshotLakeTable,
     batch: DataFrame,
     public: T.StructType | None,
@@ -532,7 +514,7 @@ def _merge_delta_first(
     try:
         t_w0 = time.perf_counter()
         out_rel, new_files, stats = table.write_files(
-            _lww(align_to(upserts, full), cols).hint("rebalance", "_bucket"), []
+            lww_fold(align_to(upserts, full), cols).hint("rebalance", "_bucket"), []
         )
         t_w1 = time.perf_counter()
         m = _await_observation(obs, decoded, metrics)
@@ -637,7 +619,7 @@ def _merge_planned(
     gate that aborts take exact Arrow inference instead, reconciled with
     the table schema and widened for the envelope's turn_idx; the grid is
     REUSED, so the batch is never scanned twice for metadata."""
-    grid = _pre_grid(spark, table, batch, public)
+    grid = _pre_grid(table, batch, public)
     if grid["n_events"] == 0:
         return {"batch_id": batch_id, "skipped": False, "events": 0, "elapsed_sec": 0.0}
     # after a delta-first anomaly abort the batch is known to misfit: a
@@ -746,14 +728,14 @@ def _write_planned(
             part = align_to(upserts.filter(F.col("_bucket").isin(cow)), full)
             merged_in = part if existing is None else align_to(existing, full).unionByName(part)
             rel, cow_files, s = table.write_files(
-                _lww(merged_in, cols).hint("rebalance", "_bucket"), cow
+                lww_fold(merged_in, cols).hint("rebalance", "_bucket"), cow
             )
             out_rels.append(rel)
             stats.update(s)
         if mor:
             part = align_to(upserts.filter(F.col("_bucket").isin(mor)), full)
             rel, mor_files, s = table.write_files(
-                _lww(part, cols).hint("rebalance", "_bucket"), mor
+                lww_fold(part, cols).hint("rebalance", "_bucket"), mor
             )
             out_rels.append(rel)
             stats.update(s)

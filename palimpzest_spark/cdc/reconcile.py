@@ -156,8 +156,8 @@ def align_to(df: DataFrame, target: T.StructType) -> DataFrame:
 
 def complex_misfit_expr(raw, dt: T.DataType):
     """Boolean Column: the raw JSON text of a COMPLEX-typed field provably
-    does NOT fit ``dt``. Shared by ``schema_fits_probe`` and
-    ``merge._anomaly_expr`` so the two gates cannot drift apart.
+    does NOT fit ``dt``. The complex-type arm of ``merge._anomaly_expr``,
+    the live schema gate of both merge paths.
 
     Array/Map: ``from_json`` returns NULL for drifted/malformed input —
     ``parsed IS NULL`` is the signal. Struct: ``from_json`` with a
@@ -196,60 +196,3 @@ def complex_misfit_expr(raw, dt: T.DataType):
         return raw.isNotNull() & reduce(lambda a, b: a | b, bads)
     parsed = F.from_json(raw, dt)
     return raw.isNotNull() & parsed.isNull()
-
-
-def schema_fits_probe(
-    batch: DataFrame, table_public: T.StructType | None, payload_col: str = "payload"
-) -> bool:
-    """JVM-side exactness probe: True iff every payload row provably fits the
-    table's current public schema — (a) every key-set ⊆ known fields, and
-    (b) every value for a non-string field survives ``try_cast`` to its
-    current type.
-
-    Why: Arrow inference (``infer_payload_schema``) is exact but costs a full
-    Python-side parse of every payload — pure overhead in steady state, when
-    schemas change rarely. This probe is one whole-stage-codegen scan (JSON
-    key extraction + try_cast, no Python, map-side aggregated to ONE row);
-    when it passes, the merge decodes straight with the known schema and the
-    Arrow pass is skipped. Any anomaly (new column, widening, type drift)
-    fails the probe and the batch pays the exact inference — so evolution
-    batches are handled identically, just not for free. Detection is exact,
-    not sampled: a single anomalous row in 10^8 fails the probe.
-
-    Kept semantically in lockstep with ``merge._anomaly_expr`` (the live
-    merge path's row-level twin of this batch-level predicate):
-    malformed/non-object payloads fail, complex-typed fields are checked
-    with ``from_json`` (a string cannot be cast to array/struct) — pinned
-    by ``tests/test_cdc.py::test_probe_agrees_with_anomaly_expr``.
-    """
-    if table_public is None:
-        return False
-    known = {f.name: f.dataType for f in table_public.fields}
-    nonnull = batch.filter(F.col(payload_col).isNotNull())
-    known_arr = F.array(*[F.lit(k) for k in sorted(known)])
-    obj_keys = F.json_object_keys(F.col(payload_col))
-    unknown_keys = F.size(F.array_except(obj_keys, known_arr))
-    checks = [
-        # json_object_keys is NULL for malformed or non-object payloads —
-        # those rows do NOT fit (the known-schema decode would silently
-        # null them out); without this check array_except(NULL, …) is NULL
-        # and the probe would wave them through
-        F.sum(obj_keys.isNull().cast("long")).alias("_malformed"),
-        F.sum((unknown_keys > 0).cast("long")).alias("_newcols"),
-    ]
-    for name, dt in known.items():
-        if isinstance(dt, (T.StringType, T.NullType)):
-            continue
-        raw = F.get_json_object(F.col(payload_col), f"$.{name}")
-        # Column-API try_cast (no SQL-string interpolation — field names
-        # with quotes/backticks must not break the expression); complex
-        # types can't be cast from string at all, so they re-parse the
-        # field's raw JSON text (struct drift needs the array-wrap trick —
-        # see complex_misfit_expr)
-        if isinstance(dt, (T.ArrayType, T.StructType, T.MapType)):
-            bad = complex_misfit_expr(raw, dt)
-        else:
-            bad = raw.isNotNull() & raw.try_cast(dt).isNull()
-        checks.append(F.sum(bad.cast("long")).alias(f"_bad_{name}"))
-    row = nonnull.agg(*checks).collect()[0]
-    return all((v or 0) == 0 for v in row)

@@ -79,7 +79,7 @@ def _state_at(
     # align_to casts PRESENT columns too (not just null-fills missing ones):
     # a type widened between the snapshots (turn_idx int->long) must read
     # back as the newer snapshot's type or downstream unions/sinks mismatch
-    return align_to(lww_fold(raw), schema)
+    return align_to(lww_fold(raw, table.schema(version).fieldNames()), schema)
 
 
 def table_changes(

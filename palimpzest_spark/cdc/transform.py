@@ -9,7 +9,6 @@ from __future__ import annotations
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -23,7 +22,3 @@ def normalize_text_series(s: pd.Series) -> pd.Series:
 @F.pandas_udf(T.StringType())
 def normalize_text_udf(s: pd.Series) -> pd.Series:
     return normalize_text_series(s)
-
-
-def normalized_text(col: str = "text") -> Column:
-    return normalize_text_udf(F.col(col))

@@ -26,7 +26,7 @@ import shutil
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from palimpzest_spark.cdc.lake import META_COLS, SnapshotLakeTable, lww_fold
+from palimpzest_spark.cdc.lake import SnapshotLakeTable
 from palimpzest_spark.cdc.merge import _await_observation
 from palimpzest_spark.cdc.timetravel import changed_buckets
 
@@ -84,8 +84,10 @@ class ConversationRollupView:
            names the changed buckets (no Spark job). If the reflected
            version's manifest was expired, every bucket counts as changed:
            a full rebuild.
-        2. Only those buckets are read at the current version and folded
-           once (the fold runs only when the scan holds a delta file).
+        2. Only those buckets are read at the current version through the
+           table's one live-read rule (``table.read(buckets=...)``: folded
+           once, and only when the scan holds a delta file; tombstones
+           dropped after the fold).
         3. Every live conversation in them is rolled up afresh; the view's
            rows from the other buckets carry forward (none are read when
            every bucket changed). A fully-deleted conversation has no live
@@ -107,14 +109,7 @@ class ConversationRollupView:
             v_from = 0
         buckets = changed_buckets(table, v_from, v_to)
         snap = table.snapshot(v_to)
-        raw = table.read_raw(spark, buckets, version=v_to)
-        if raw is None:
-            live = table._empty_public(spark, v_to)
-        else:
-            if any(snap["deltas"].get(str(b)) for b in buckets):
-                raw = lww_fold(raw)
-            public = [c for c in raw.columns if c not in META_COLS]
-            live = raw.filter(~F.col("_deleted")).select(*public)
+        live = table.read(spark, version=v_to, buckets=buckets)
         count = [F.count(F.lit(1)).alias("n")]
         obs = Observation()
         fresh = _rollup(live).observe(obs, *count)

@@ -24,7 +24,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,21 +39,6 @@ ASSET_SCHEMA = T.StructType(
         T.StructField("duration_ms", T.LongType(), True),
     ]
 )
-
-
-def read_binary_assets(spark: SparkSession, path: str, modality: str) -> DataFrame:
-    """Ingest a directory of media files: one row per file, bytes + metadata.
-    (``spark.read.format("binaryFile")`` — the ImageFileDataset analogue.)"""
-    df = spark.read.format("binaryFile").load(path)
-    return df.select(
-        F.xxhash64("path").alias("asset_id"),
-        F.lit(modality).alias("modality"),
-        F.col("content"),
-        F.element_at(F.split("path", r"\."), -1).alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
 
 
 def _fake_features(buf: bytes | None, dim: int) -> list[float]:

@@ -240,11 +240,6 @@ def _norm_of(col: Column) -> Column:
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda a, x: a + x * x))
 
 
-def hyperplanes_from(corpus: DataFrame, vec_col: str, bits: int, seed: int) -> np.ndarray:
-    dim = len(corpus.select(vec_col).first()[0])
-    return hyperplanes(dim, bits, seed)
-
-
 # --- IVF (inverted-file) index -------------------------------------------------------
 
 

@@ -19,7 +19,7 @@ Dialect divergences handled by explicit ``__TOKEN__`` replacement (never
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _TOKENS = {
@@ -182,13 +182,6 @@ def token_count(col: str = "text") -> Column:
 
 def word_count(col: str = "text") -> Column:
     return F.expr(word_count_sql(col, "spark"))
-
-
-def quality_metrics(df: DataFrame, col: str = "text") -> DataFrame:
-    out = df
-    for name in QUALITY_PARTS:
-        out = out.withColumn(name, F.expr(quality_part_sql(name, col, "spark")))
-    return out.withColumn("quality_score", F.expr(quality_score_sql(col, "spark")))
 
 
 def lang_id(col: str = "text") -> Column:

@@ -27,8 +27,6 @@ PARENT_ID = "_parent_id"
 CARDINALITY_IDX = "_cardinality_idx"
 ROW_ID = "_id"
 
-LINEAGE_COLS = (SOURCE_IDX, PARENT_ID, CARDINALITY_IDX, ROW_ID)
-
 
 def with_source_lineage(
     df: DataFrame,
@@ -78,8 +76,3 @@ def derive_child_id(df: DataFrame, op_label: str) -> DataFrame:
             256,
         ),
     )
-
-
-def strip_lineage(df: DataFrame) -> DataFrame:
-    keep = [c for c in df.columns if c not in LINEAGE_COLS]
-    return df.select(*keep)

@@ -1,38 +1,19 @@
 """Dynamic schema algebra over ``StructType``.
 
 The reference builds schemas at plan time from dynamic pydantic models:
-``union_schemas`` (plain union or join-union with ``_right`` renaming,
-``core/lib/schemas.py:145-172``), ``project`` (``schemas.py:99-111``),
-``relax_schema`` (types not enforced, ``schemas.py:90-96``), plus semantic
-string aliases for modality routing (``schemas.py:20-57``).
+``union_schemas`` (``core/lib/schemas.py:145-162``), ``project``
+(``schemas.py:99-111``) and ``relax_schema`` (types not enforced,
+``schemas.py:90-96``).
 
-Here the same algebra is expressed over ``StructType``:
-- semantic aliases → ``StringType`` + a ``modality`` tag in StructField
-  metadata (so later stages can route image/audio columns without a type
-  system change);
-- ``relax`` → explicit type *widening* rules (int32→int64, int→double,
-  anything→string) used by both plan-time unions and the CDC engine's
-  Arrow-based microbatch reconciliation (``cdc/reconcile.py``).
+Here the same algebra is expressed over ``StructType``: ``relax`` becomes
+explicit type *widening* rules (int32→int64, int→double, anything→string)
+used by both plan-time unions and the CDC engine's Arrow-based microbatch
+reconciliation (``cdc/reconcile.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# modality tags carried in StructField.metadata — the Spark form of the
-# reference's ImageFilepath/ImageBase64/ImageURL/AudioFilepath/AudioBase64
-# aliases (schemas.py:20-57).
-MODALITY_KEY = "pz.modality"
-TEXT, IMAGE, AUDIO, VIDEO, BINARY = "text", "image", "audio", "video", "binary"
-
-
-def semantic_field(name: str, modality: str, dtype: T.DataType | None = None) -> T.StructField:
-    return T.StructField(name, dtype or T.StringType(), True, metadata={MODALITY_KEY: modality})
-
-
-def field_modality(f: T.StructField) -> str | None:
-    return (f.metadata or {}).get(MODALITY_KEY)
-
 
 # --- type widening lattice -------------------------------------------------
 
@@ -82,19 +63,6 @@ def union_schemas(schemas: list[T.StructType]) -> T.StructType:
             else:
                 out[f.name] = T.StructField(f.name, f.dataType, True, metadata=f.metadata)
     return T.StructType(list(out.values()))
-
-
-def join_union_schemas(
-    left: T.StructType, right: T.StructType, right_suffix: str = "_right"
-) -> T.StructType:
-    """Join-union with the ``*_right`` renaming contract
-    (``schemas.py:163-172``, ``records.py:252-256``)."""
-    lnames = {f.name for f in left.fields}
-    fields = list(left.fields)
-    for f in right.fields:
-        name = f.name + right_suffix if f.name in lnames else f.name
-        fields.append(T.StructField(name, f.dataType, True, metadata=f.metadata))
-    return T.StructType(fields)
 
 
 def project(schema: T.StructType, cols: list[str]) -> T.StructType:

@@ -194,12 +194,6 @@ def xls_files(spark: SparkSession, path: str, parser: str = "lite") -> DataFrame
     )
 
 
-def audio_files(spark: SparkSession, path: str) -> DataFrame:
-    """Audio as opaque binary + metadata (``iter_dataset.py:472-511``) —
-    feature extraction is ``functions.multimodal.extract_features``."""
-    return binary_files(spark, path).withColumn("modality", F.lit("audio"))
-
-
 def image_files(spark: SparkSession, path: str) -> DataFrame:
     """Images as opaque binary (``iter_dataset.py:284-323``)."""
     return binary_files(spark, path).withColumn("modality", F.lit("image"))

@@ -346,11 +346,28 @@ def test_pyfiles_zip_builds(tmp_path):
     assert not any("__pycache__" in n for n in names)
 
 
+def _fits_live_gate(batch, public) -> bool:
+    """True iff the merge's live schema gate — ``_anomaly_expr`` over the
+    ``_m`` map<string,string> parse of ``payload`` — counts no row of
+    ``batch`` as misfitting ``public``."""
+    from pyspark.sql import functions as F
+
+    from palimpzest_spark.cdc.merge import _anomaly_expr
+
+    n = (
+        batch.withColumn("_m", F.from_json("payload", "map<string,string>"))
+        .agg(F.sum(_anomaly_expr(public)).alias("n"))
+        .collect()[0]["n"]
+    )
+    return (n or 0) == 0
+
+
 def test_schema_fits_probe_detects_anomalies(spark):
-    """The JVM probe must pass on fitting batches and fail on exactly the
-    three anomaly classes: new column, numeric widening-needed, type drift."""
+    """The live schema gate must pass on fitting batches and fail on exactly
+    the three anomaly classes: new column, numeric widening-needed, type
+    drift. (A table with no schema yet has no gate: the first write infers,
+    pinned by test_first_write_without_bootstrap_matches_fold.)"""
     from pyspark.sql import types as T
-    from palimpzest_spark.cdc.reconcile import schema_fits_probe
 
     public = T.StructType(
         [
@@ -364,18 +381,16 @@ def test_schema_fits_probe_detects_anomalies(spark):
         return spark.createDataFrame([(p,) for p in payloads], "payload string")
 
     fits = b(['{"conv_id": "c1", "turn_idx": 3, "text": "hi"}', None])
-    assert schema_fits_probe(fits, public)
+    assert _fits_live_gate(fits, public)
 
     new_col = b(['{"conv_id": "c1", "turn_idx": 3, "text": "hi", "tool_args": "x"}'])
-    assert not schema_fits_probe(new_col, public)
+    assert not _fits_live_gate(new_col, public)
 
     widen = b(['{"conv_id": "c1", "turn_idx": 3000000000, "text": "hi"}'])  # > int32
-    assert not schema_fits_probe(widen, public)
+    assert not _fits_live_gate(widen, public)
 
     drift = b(['{"conv_id": "c1", "turn_idx": "not-a-number", "text": "hi"}'])
-    assert not schema_fits_probe(drift, public)
-
-    assert not schema_fits_probe(fits, None)  # no table schema yet → must infer
+    assert not _fits_live_gate(drift, public)
 
 
 def test_mor_delta_path_and_compaction(spark, tmp_path):
@@ -676,15 +691,127 @@ def test_read_ts_range_zone_map_pruning(spark, tmp_path):
     assert n_pruned < n_all, (n_pruned, n_all)
 
 
-def _jobs(spark, fn):
-    """(Spark jobs started by ``fn()``, its result)."""
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = int(sched.nextJobId())
-    out = fn()
-    return int(sched.nextJobId()) - j0, out
+@pytest.fixture(scope="module")
+def live_reads(spark, tmp_path_factory):
+    """Every live read of one 4-bucket table, each taken once over buckets
+    that carry delta files and once over compacted buckets. Maps ``(reader,
+    state)`` to ``(frame, version, keep)``; ``keep`` cuts the fold of the
+    whole feed down to the rows that read covers. Three one-file batches
+    leave delta files in every bucket they touch; then bucket 1 alone is
+    compacted, then the whole table. The rollup view refreshes after the
+    third batch (its changed buckets carry deltas) and after the one-bucket
+    compaction (its one changed bucket is compacted); each refresh's frame
+    is the one its ``table.read`` call returned."""
+    from palimpzest_spark.cdc.lake import bucket_of
+    from palimpzest_spark.cdc.views import ConversationRollupView
+
+    d = str(tmp_path_factory.mktemp("live"))
+    base = feedgen.gen_base_table(f"{d}/base", n_convs=200, max_turns=12, seed=13)
+    paths = feedgen.gen_change_feed(
+        f"{d}/feed", n_events=180, n_convs=200, max_turns=12, n_files=3, seed=13,
+    )
+    table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
+    bootstrap(spark, table, base)
+    view = ConversationRollupView(f"{d}/view")
+    for i, p in enumerate(paths):
+        merge_batch(spark, table, spark.read.schema(FEED_SCHEMA).parquet(p), batch_id=i)
+        if i == 1:
+            view.full_build(spark, table)
+    assert all(table.snapshot()["deltas"].get(str(b)) for b in range(4)), "vacuous"
+
+    refreshed = []
+
+    def spy_read(*a, **k):
+        refreshed.append(SnapshotLakeTable.read(table, *a, **k))
+        return refreshed[-1]
+
+    table.read = spy_read
+    try:
+        m_deltas = view.refresh(spark, table)
+        v_refresh = table.current_version()
+        table.compact(spark, [1])
+        assert view.refresh(spark, table)["recomputed_buckets"] == [1]
+    finally:
+        del table.read
+    v_mixed = table.current_version()
+    table.compact(spark)
+    v_compact = table.current_version()
+
+    feed = pd.concat([pd.read_parquet(p) for p in paths], ignore_index=True)
+    ts = pd.to_datetime(fold(pd.read_parquet(base), feed)["ts"]).dropna()
+    lo, hi = ts.quantile(0.25).to_pydatetime(), ts.quantile(0.5).to_pydatetime()
+    conv_d, conv_c = (
+        sorted(c for c in set(feed["conv_id"]) if bucket_of(c, 4) == b)[0] for b in (0, 1)
+    )
+
+    def buckets(*bs):
+        return lambda e: e[[bucket_of(c, 4) in bs for c in e["conv_id"]]]
+
+    def conv(c):
+        return lambda e: e[e["conv_id"] == c]
+
+    def ts_range(e):
+        t = pd.to_datetime(e["ts"])
+        return e[(t >= lo) & (t <= hi)]
+
+    def every(e):
+        return e
+
+    read, read_conv, read_ts = table.read, table.read_conv, table.read_ts_range
+    return {
+        "expected": fold(pd.read_parquet(base), feed),
+        "table": table,
+        ("read", "deltas"): (read(spark, version=v_mixed), v_mixed, every),
+        ("read", "compacted"): (read(spark, version=v_compact), v_compact, every),
+        ("read_buckets", "deltas"): (
+            read(spark, version=v_mixed, buckets=[0]), v_mixed, buckets(0)),
+        ("read_buckets", "compacted"): (
+            read(spark, version=v_mixed, buckets=[1]), v_mixed, buckets(1)),
+        ("read_conv", "deltas"): (
+            read_conv(spark, [conv_d], version=v_mixed), v_mixed, conv(conv_d)),
+        ("read_conv", "compacted"): (
+            read_conv(spark, [conv_c], version=v_mixed), v_mixed, conv(conv_c)),
+        ("read_ts_range", "deltas"): (
+            read_ts(spark, lo, hi, version=v_mixed), v_mixed, ts_range),
+        ("read_ts_range", "compacted"): (
+            read_ts(spark, lo, hi, version=v_compact), v_compact, ts_range),
+        ("view_refresh", "deltas"): (
+            refreshed[0], v_refresh, buckets(*m_deltas["recomputed_buckets"])),
+        ("view_refresh", "compacted"): (refreshed[1], v_mixed, buckets(1)),
+    }
 
 
-def test_steady_cdc_call_job_budget(spark, tmp_path):
+@pytest.mark.parametrize("state", ["deltas", "compacted"])
+@pytest.mark.parametrize(
+    "reader", ["read", "read_buckets", "read_conv", "read_ts_range", "view_refresh"]
+)
+def test_live_read_rule(spark, live_reads, reader, state):
+    """Every live read is one rule: its rows equal the pandas fold over the
+    rows it covers; its optimized plan folds (holds an Aggregate) exactly
+    when it scans a delta file, so a read over compacted buckets never
+    folds; and its columns are the snapshot's public schema, in order,
+    whether it folded or not."""
+    import os
+
+    from palimpzest_spark.cdc.lake import META_COLS
+
+    df, version, keep = live_reads[(reader, state)]
+    table = live_reads["table"]
+    snap = table.snapshot(version)
+    deltas = {os.path.join(table.root, p) for ps in snap["deltas"].values() for p in ps}
+    scanned = {f.removeprefix("file://") for f in df.inputFiles()}
+    assert bool(scanned & deltas) == (state == "deltas"), "fixture lost its state"
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert ("Aggregate" in plan) == (state == "deltas"), plan
+    assert df.columns == [f.name for f in table.schema(version).fields
+                          if f.name not in META_COLS]
+    expected = keep(live_reads["expected"]).reset_index(drop=True)
+    actual = df.toPandas().sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    assert len(expected) > 0, "vacuous: the read covers no live row"
+    _assert_state_equal(actual.reset_index(drop=True), expected)
+
+
+def test_steady_cdc_call_job_budget(spark, tmp_path, count_jobs):
     """The CDC calls the benchmark times start a pinned number of Spark
     jobs: the first merge_batch after bootstrap (planned, known schema), a
     steady delta-first merge_batch with no compaction, a read_conv point
@@ -704,22 +831,22 @@ def test_steady_cdc_call_job_budget(spark, tmp_path):
         return merge_batch(
             spark, table, spark.read.schema(FEED_SCHEMA).parquet(files[i]), batch_id=i)
 
-    n, m = _jobs(spark, lambda: merge(0))
+    n, m = count_jobs(lambda: merge(0))
     assert m["path"] == "planned_known" and m["aborts"] == [], m
     assert 1 <= n <= 5, f"first merge_batch after bootstrap started {n} Spark jobs"
     merge(1)
     merge(2)
 
-    n, m = _jobs(spark, lambda: merge(3))
+    n, m = count_jobs(lambda: merge(3))
     assert m["path"] == "delta_first" and m["compacted_buckets"] == 0, m
     assert 1 <= n <= 3, f"steady merge_batch started {n} Spark jobs"
 
     conv = sorted(pd.read_parquet(base)["conv_id"])[7]
-    n, rows = _jobs(spark, lambda: table.read_conv(spark, [conv]).collect())
+    n, rows = count_jobs(lambda: table.read_conv(spark, [conv]).collect())
     assert rows and 1 <= n <= 2, f"read_conv started {n} Spark jobs"
 
     lo = feedgen.BASE_EPOCH * 10**6
-    n, _ = _jobs(spark, lambda: table.read_ts_range(spark, lo, lo + 3_600 * 10**6)
+    n, _ = count_jobs(lambda: table.read_ts_range(spark, lo, lo + 3_600 * 10**6)
                  .write.format("noop").mode("overwrite").save())
     assert 1 <= n <= 2, f"read_ts_range started {n} Spark jobs"
 
@@ -775,7 +902,7 @@ def _assert_tool_args_equal(actual: pd.DataFrame, expected: pd.DataFrame):
     assert a == e
 
 
-def test_drift_with_null_offsets_after_delta_first_abort_matches_fold(spark, tmp_path):
+def test_drift_with_null_offsets_after_delta_first_abort_matches_fold(spark, tmp_path, count_jobs):
     """A small drifted batch (new payload key) with null source offsets on a
     steady table: delta-first aborts on the anomaly and the planned merge
     goes straight to inference, with no second optimistic write. Lineage
@@ -791,7 +918,7 @@ def test_drift_with_null_offsets_after_delta_first_abort_matches_fold(spark, tmp
 
     f2, b2 = _upserts(spark, keys[100:110], range(100, 110),
                       extra={"tool_args": "{\"q\": 1}"}, offsets=False)
-    n, m = _jobs(spark, lambda: merge_batch(spark, table, b2, batch_id=2))
+    n, m = count_jobs(lambda: merge_batch(spark, table, b2, batch_id=2))
     assert (m["path"], m["aborts"]) == ("planned_inferred", ["delta_first:anomaly"]), m
     assert m["lineage"] == {"0": {"events": 10, "max_offset": -1}}
     assert 1 <= n <= 9, f"delta-first abort → inferred started {n} Spark jobs"
@@ -803,7 +930,7 @@ def test_drift_with_null_offsets_after_delta_first_abort_matches_fold(spark, tmp
     _assert_tool_args_equal(actual, expected)
 
 
-def test_known_gate_abort_reruns_inferred(spark, tmp_path):
+def test_known_gate_abort_reruns_inferred(spark, tmp_path, count_jobs):
     """Drifted rows the strided sample misses: the known-schema write's
     exact observed gate aborts it (no files left behind) and the same grid
     feeds the inferred write; the table equals the fold."""
@@ -814,7 +941,7 @@ def test_known_gate_abort_reruns_inferred(spark, tmp_path):
     keys = sorted(zip(*[pd.read_parquet(base)[c] for c in ("conv_id", "turn_idx")]))
     f, b = _upserts(spark, keys[:40], _sampled_seqs(spark, False, 40),
                     extra={"tool_args": "{\"q\": 2}"})
-    n, m = _jobs(spark, lambda: merge_batch(spark, table, b, batch_id=1))
+    n, m = count_jobs(lambda: merge_batch(spark, table, b, batch_id=1))
     assert (m["path"], m["aborts"]) == ("planned_inferred", ["planned_known:anomaly"]), m
     assert 1 <= n <= 9, f"known → inferred started {n} Spark jobs"
     assert _uncommitted_files(table) == set()
@@ -873,7 +1000,7 @@ def test_planned_write_failure_leaves_no_uncommitted_files(spark, tmp_path, monk
     _assert_tool_args_equal(actual, expected)
 
 
-def test_first_write_without_bootstrap_matches_fold(spark, tmp_path):
+def test_first_write_without_bootstrap_matches_fold(spark, tmp_path, count_jobs):
     """Merging into a table that was never bootstrapped (``cdc.runner``
     without ``--base``) plans from the grid with nothing to sample against,
     infers the schema, and equals the fold over an empty base."""
@@ -882,7 +1009,7 @@ def test_first_write_without_bootstrap_matches_fold(spark, tmp_path):
         f"{d}/feed", n_events=400, n_convs=30, max_turns=4, n_files=1, seed=24,
     )
     table = SnapshotLakeTable(f"{d}/lake", n_buckets=4)
-    n, m = _jobs(spark, lambda: merge_batch(
+    n, m = count_jobs(lambda: merge_batch(
         spark, table, spark.read.schema(FEED_SCHEMA).parquet(*paths), batch_id=0))
     assert (m["path"], m["aborts"]) == ("planned_inferred", []), m
     assert 1 <= n <= 6, f"first write started {n} Spark jobs"
@@ -1473,17 +1600,12 @@ def test_two_streaming_shards_share_table(spark, tmp_path):
 
 
 def test_probe_agrees_with_anomaly_expr(spark):
-    """schema_fits_probe (batch-level steady-path gate) and merge's
-    _anomaly_expr (row-level anomaly counter) are two implementations of
-    the same predicate and must agree — including on malformed / non-object
-    payloads (json_object_keys is NULL there) and on COMPLEX-typed table
-    fields (a string cannot be cast to array/struct; both sides must
-    re-parse with from_json instead of raising at analysis time)."""
-    from pyspark.sql import functions as F
+    """merge's _anomaly_expr (the live row-level schema gate of both merge
+    paths) flags exactly the payloads that misfit — including malformed /
+    non-object payloads (the map parse is NULL there) and COMPLEX-typed
+    table fields (a string cannot be cast to array/struct; the gate
+    re-parses with from_json instead of raising at analysis time)."""
     from pyspark.sql import types as T
-
-    from palimpzest_spark.cdc.merge import _anomaly_expr
-    from palimpzest_spark.cdc.reconcile import schema_fits_probe
 
     public = T.StructType(
         [
@@ -1505,7 +1627,7 @@ def test_probe_agrees_with_anomaly_expr(spark):
     cases = [
         ('{"conv_id": "c1", "turn_idx": 3}', True),
         ('{"conv_id": "c1", "turn_idx": 3, "tool_args": {"x": [1, 2]}}', True),
-        ("not json", False),          # malformed: both sides must flag it
+        ("not json", False),          # malformed: the gate must flag it
         ("[1, 2]", False),            # non-object payload
         ('{"conv_id": "c1", "turn_idx": "zz"}', False),   # type drift
         ('{"conv_id": "c1", "extra": 1}', False),          # unknown key
@@ -1534,13 +1656,7 @@ def test_probe_agrees_with_anomaly_expr(spark):
     ]
     for payload, fits in cases:
         b = spark.createDataFrame([(payload,)], "payload string")
-        assert schema_fits_probe(b, public) is fits, payload
-        n_anom = (
-            b.withColumn("_m", F.from_json("payload", "map<string,string>"))
-            .agg(F.sum(_anomaly_expr(public)).alias("n"))
-            .collect()[0]["n"]
-        )
-        assert ((n_anom or 0) == 0) is fits, payload
+        assert _fits_live_gate(b, public) is fits, payload
 
 
 def test_struct_inner_key_after_evolution_matches_fold(spark, tmp_path):

@@ -448,16 +448,13 @@ _PAIR_PLANS = {
 
 
 @pytest.mark.parametrize("name", sorted(_PAIR_PLANS))
-def test_pair_plan_persists_nothing_within_job_budget(spark, docs, name):
+def test_pair_plan_persists_nothing_within_job_budget(spark, docs, name, count_jobs):
     """A pair function returns a plain lazy plan: collecting it leaves
     Spark's cache empty and starts at most its pinned number of jobs, so a
     new persist, collect or count fails here."""
     plan, budget = _PAIR_PLANS[name]
     spark.catalog.clearCache()
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = int(sched.nextJobId())
-    rows = plan(docs).collect()
-    jobs = int(sched.nextJobId()) - j0
+    jobs, rows = count_jobs(lambda: plan(docs).collect())
     assert rows, "vacuous: the plan found no pairs"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert jobs <= budget, f"{name} started {jobs} Spark jobs"

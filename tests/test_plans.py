@@ -135,12 +135,11 @@ def test_asof_join_tie_on_right_ts_is_deterministic(spark):
         ("pack_sequences_oracle", 5),
     ],
 )
-def test_query_suite_job_budget(spark, name, budget):
+def test_query_suite_job_budget(spark, name, budget, count_jobs):
     """Building and running each query the query_suite benchmark times (to
     the noop sink, as the benchmark does) starts at most its pinned number
     of Spark jobs, footer reads included: a new collect or count fails."""
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = int(sched.nextJobId())
-    QUERIES[name](spark, SF_TEST).write.format("noop").mode("overwrite").save()
-    jobs = int(sched.nextJobId()) - j0
+    jobs, _ = count_jobs(
+        lambda: QUERIES[name](spark, SF_TEST).write.format("noop").mode("overwrite").save()
+    )
     assert jobs <= budget, f"{name} started {jobs} Spark jobs"

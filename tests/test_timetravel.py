@@ -403,7 +403,7 @@ def test_view_refresh_after_snapshot_expiry(spark, tmp_path):
     _assert_view_current(spark, view, table)
 
 
-def test_view_refresh_job_budget(spark, tmp_path):
+def test_view_refresh_job_budget(spark, tmp_path, count_jobs):
     """A refresh over delta-carrying buckets starts at most 4 Spark jobs —
     the previous view's schema read, the fold and rollup shuffles, and the
     write — both when every bucket changed and when one bucket changed and
@@ -411,14 +411,11 @@ def test_view_refresh_job_budget(spark, tmp_path):
     the write."""
     d = str(tmp_path)
     table, view = _view_case(spark, d)
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
     for change in (lambda: _replay_rest(spark, table, d),
                    lambda: _delete_conversation(spark, table, batch_id=4)):
         change()
         assert table.has_deltas(), "vacuous: no fold to run"
-        j0 = int(sched.nextJobId())
-        m = view.refresh(spark, table)
-        jobs = int(sched.nextJobId()) - j0
+        jobs, m = count_jobs(lambda: view.refresh(spark, table))
         assert m["refreshed"] and jobs <= 4, f"refresh started {jobs} Spark jobs"
         _assert_view_current(spark, view, table)
 
